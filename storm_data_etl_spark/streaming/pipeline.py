@@ -17,9 +17,12 @@ reliability mechanics are Spark built-ins:
                                progress with numInputRows > 0
 - metrics (ST7)              → StreamingQueryProgress counters
 
-The transform is THE SAME `enrich_raw` used in batch — batch tests certify
-streaming semantics (the reference makes the identical argument for its
-shared Transformer, docs/Architecture.md:93-96).
+The enrichment plan is built once, on the streaming DataFrame, when the query
+starts (`enrich_stream`); each micro-batch callback only splits that plan's
+output into good events and dead letters. The transform is THE SAME
+`enrich_raw` used in batch — batch tests certify streaming semantics (the
+reference makes the identical argument for its shared Transformer,
+docs/Architecture.md:93-96).
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
-from storm_data_etl_spark.functions.enrich import enrich_raw, json_valid, parse_raw_events
+from storm_data_etl_spark.functions.enrich import SPLIT_COLS, enrich_raw, parse_raw_events
 from storm_data_etl_spark.sources.kafka import serialize_events
 
 
@@ -41,9 +44,10 @@ def text_stream_to_envelope(
 ) -> DataFrame:
     """Adapt a text file-source stream (one JSON payload per line) to the
     Kafka envelope contract (schema.ENVELOPE_SCHEMA columns) so the same
-    pipeline runs broker-less — the single definition the streaming golden
-    test and stream_bench both use (two hand-maintained copies of this
-    select would silently diverge when the envelope contract changes)."""
+    pipeline runs broker-less — the single definition the streaming tests
+    and the benchmark's stream workload share (two hand-maintained copies of
+    this select would silently diverge when the envelope contract
+    changes)."""
     return text_df.select(
         F.lit(None).cast("binary").alias("key"),
         F.col("value").cast("binary").alias("value"),
@@ -57,6 +61,19 @@ def text_stream_to_envelope(
     )
 
 
+def _tag_envelope(envelope: DataFrame) -> DataFrame:
+    """`parse_raw_events` with the original envelope row packed in the
+    `_envelope` struct beside the `_valid` flag (enrich.SPLIT_COLS)."""
+    packed = F.struct(*[F.col(c) for c in envelope.columns])
+    return parse_raw_events(envelope.withColumn("_envelope", packed))
+
+
+def _dead_letters(tagged: DataFrame) -> DataFrame:
+    """The invalid rows of a tagged DataFrame as the original envelope rows
+    (every column and type, value bytes and offsets intact)."""
+    return tagged.filter(~F.col("_valid")).select("_envelope.*")
+
+
 def split_poison(envelope: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split the raw envelope into (good_parsed, dead_letter_envelope).
 
@@ -65,21 +82,23 @@ def split_poison(envelope: DataFrame) -> tuple[DataFrame, DataFrame]:
     log-and-skip with the raw payload in the warn record
     (pipeline.go:127-139).
     """
-    valid = json_valid("value")
-    good = parse_raw_events(envelope.filter(valid))
-    dead = envelope.filter(~valid)
-    return good, dead
+    tagged = _tag_envelope(envelope)
+    return tagged.filter(F.col("_valid")).drop("_envelope"), _dead_letters(tagged)
 
 
 def enrich_stream(
     envelope: DataFrame, processed_at: str | None = None
 ) -> DataFrame:
-    """Streaming-safe enrichment plan: envelope → enriched events (good rows
-    only). Stateless narrow transform — no watermark or state store needed
-    (there are no streaming windows in the reference; time_bucket is a
-    per-row column, SURVEY §2.7)."""
-    parsed = parse_raw_events(envelope)
-    return enrich_raw(parsed.filter(F.col("_valid")), processed_at=processed_at)
+    """The streaming plan, built once per query: every envelope row →
+    `_valid`, `_envelope` (the original row, for dead-letter replay) and the
+    EVENT_SCHEMA columns. Stateless narrow transform — no watermark or state
+    store needed (there are no streaming windows in the reference;
+    time_bucket is a per-row column, SURVEY §2.7).
+
+    ``processed_at=None`` stamps each row with its micro-batch's timestamp
+    from the offset log, so every action on a batch, a retried epoch
+    included, sees the same value."""
+    return enrich_raw(_tag_envelope(envelope), processed_at=processed_at)
 
 
 def run_pipeline(
@@ -102,21 +121,28 @@ def run_pipeline(
     extract→transform→load loop, with offset commit after load handled by
     the checkpoint.
 
+    The enrichment plan (`enrich_stream`) is built once, here, at query
+    start; the per-batch callback does only the good/dead split of its
+    output. ``processed_at`` freezes the clock; None stamps rows with the
+    micro-batch timestamp (stable across the batch's actions and retries).
+
     ``metrics`` (a PipelineMetricsListener) mirrors the reference's in-loop
-    counter increments (pipeline.go's MessagesProduced / TransformErrors):
-    the batch is persisted for the extra count action, bounded by the
-    micro-batch size — the standard multi-action foreachBatch pattern.
+    counter increments (pipeline.go's MessagesProduced / TransformErrors).
+    Each micro-batch is persisted for its several actions (sinks and
+    counts), bounded by the micro-batch size — the standard multi-action
+    foreachBatch pattern.
     """
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        good_parsed, dead = split_poison(batch_df)
-        good = enrich_raw(good_parsed, processed_at=processed_at)
-        # Persist in try/finally: a sink failure must not leak the cached
-        # micro-batch across the retry (Spark re-runs the epoch). Counter
-        # increments are deferred to after ALL sink writes (see below).
-        if metrics is not None:
-            good = good.persist()
-            dead = dead.persist()
+        # The batch is a scan of the query plan's computed rows, so every
+        # action on it would re-run the enrichment: persist it once for the
+        # sink, dead-letter and counter actions. Persist in try/finally: a
+        # sink failure must not leak the cached micro-batch across the retry
+        # (Spark re-runs the epoch). Counter increments are deferred to
+        # after ALL sink writes (see below).
+        batch_df = batch_df.persist()
+        good = batch_df.filter(F.col("_valid")).drop(*SPLIT_COLS)
+        dead = _dead_letters(batch_df)
         try:
             if sink is not None:
                 sink(good, epoch_id)
@@ -151,12 +177,11 @@ def run_pipeline(
                 metrics.record_produced(good.count())
                 metrics.record_transform_errors(dead.count())
         finally:
-            if metrics is not None:
-                good.unpersist()
-                dead.unpersist()
+            batch_df.unpersist()
 
+    enriched = enrich_stream(envelope_stream, processed_at=processed_at)
     return (
-        envelope_stream.writeStream.foreachBatch(process_batch)
+        enriched.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=trigger_interval)
         .start()
