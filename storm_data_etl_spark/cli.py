@@ -73,10 +73,12 @@ def cmd_validate(args: argparse.Namespace) -> int:
         checks += V.phase1_source_parity(
             raw.drop("_pos"), collector, order_cols=list(raw.drop("_pos").columns)
         )
+    # `_pos` passes through enrich_raw, so the first-wins dedup below keeps
+    # the earliest raw record per id.
     expected = enrich_raw(
         raw.withColumn("_base_ts", F.lit(args.base_date).cast("timestamp")),
         processed_at=args.processed_at,
-    ).withColumn("_pos", F.monotonically_increasing_id())
+    )
     checks += V.phase2_etl_integrity(raw, raw)
     checks += V.phase3_api_transformation(expected, api, "_pos")
     checks += V.phase4_schema_alignment(V._flatten(api))

@@ -8,7 +8,7 @@ analog of the reference's single-pass per-row transform.
 
 Fixed pipeline order (transform.go:148-161): normalize type → normalize unit
 → normalize magnitude → derive severity → extract office → parse location →
-time bucket → processed-at. `enrich()` composes them in exactly that order.
+time bucket → processed-at. `enrich_raw` composes them in exactly that order.
 
 Sentinels: invalid type/unit/office → '' (not NULL); severity / distance /
 direction → NULL; zero time → NULL timestamp.
@@ -265,39 +265,6 @@ def extract_source_office(comments: ColumnOrName) -> Column:
     return F.regexp_extract(F.trim(_c(comments)), SOURCE_OFFICE_RE, 1)
 
 
-def _location_match(raw_trimmed: Column) -> Column:
-    return raw_trimmed.rlike(LOCATION_RE)
-
-
-def parse_location_name(raw: ColumnOrName) -> Column:
-    """Parsed place name; unparsed → the (trimmed) raw string; '' → ''.
-
-    transform.go:283-301. Go trims the captured name; the input was already
-    trimmed so group 3 has no trailing spaces, but we mirror with trim().
-    """
-    t = F.trim(_c(raw))
-    return F.when(
-        _location_match(t), F.trim(F.regexp_extract(t, LOCATION_RE, 3))
-    ).otherwise(t)
-
-
-def parse_location_distance(raw: ColumnOrName) -> Column:
-    """Parsed distance (miles) or NULL. Group 1 is ^\\d+(\\.\\d+)? so the
-    float parse cannot fail — NULL iff the pattern doesn't match."""
-    t = F.trim(_c(raw))
-    return F.when(
-        _location_match(t), F.regexp_extract(t, LOCATION_RE, 1).cast("double")
-    ).otherwise(F.lit(None).cast("double"))
-
-
-def parse_location_direction(raw: ColumnOrName) -> Column:
-    """Parsed compass direction or NULL."""
-    t = F.trim(_c(raw))
-    return F.when(
-        _location_match(t), F.regexp_extract(t, LOCATION_RE, 2)
-    ).otherwise(F.lit(None).cast("string"))
-
-
 def time_bucket(event_time_col: ColumnOrName) -> Column:
     """Truncate event time to the hour, UTC (session TZ is pinned UTC).
     transform.go:309-315; zero time → NULL propagates naturally."""
@@ -305,10 +272,11 @@ def time_bucket(event_time_col: ColumnOrName) -> Column:
 
 
 #: The poison-pill split's bookkeeping columns: the validity flag and the
-#: original envelope row packed in one struct. An input that carries them
-#: (the streaming plan, streaming/pipeline.py) keeps them through
-#: `parse_raw_events` and `enrich_raw`, so one plan feeds both the event
-#: sink and the dead-letter replay; batch inputs never have them.
+#: original envelope row packed in one struct. The streaming plan
+#: (streaming/pipeline.py) adds them; `parse_raw_events` keeps `_envelope`,
+#: and `enrich_raw` keeps both because it passes through every column it
+#: does not read, so one plan feeds both the event sink and the dead-letter
+#: replay. Batch inputs never have them.
 SPLIT_COLS = ("_valid", "_envelope")
 
 
@@ -334,7 +302,7 @@ def json_valid(value_col: ColumnOrName = "value") -> Column:
     return parsed.isNotNull() & parsed["_corrupt"].isNull()
 
 
-def parse_raw_events(df: DataFrame, value_col: str = "value", ts_col: str = "timestamp") -> DataFrame:
+def parse_raw_events(df: DataFrame) -> DataFrame:
     """ParseRawEvent (transform.go:26-48) over an envelope DataFrame.
 
     Expects Kafka-envelope columns (`value` binary/string JSON, `timestamp`).
@@ -349,7 +317,7 @@ def parse_raw_events(df: DataFrame, value_col: str = "value", ts_col: str = "tim
     from_json yields NULL (not '') for missing/null string fields, while Go
     unmarshals into zero-value "" — so every raw field is coalesced to ''.
     """
-    out = df.withColumn("parsed", _parse_json(F.col(value_col)))
+    out = df.withColumn("parsed", _parse_json(F.col("value")))
     raw_cols = [
         F.coalesce(F.col(f"parsed.{f.name}"), F.lit("")).alias(f.name)
         for f in RAW_SCHEMA.fields
@@ -357,22 +325,18 @@ def parse_raw_events(df: DataFrame, value_col: str = "value", ts_col: str = "tim
     valid = F.col("parsed").isNotNull() & F.col("parsed._corrupt").isNull()
     return out.select(
         valid.alias("_valid"),
-        F.col(ts_col).alias("_base_ts"),
+        F.col("timestamp").alias("_base_ts"),
         *raw_cols,
         *(["_envelope"] if "_envelope" in df.columns else []),
     )
 
 
-def enrich_raw(
-    df: DataFrame,
-    processed_at: str | None = None,
-    base_ts_col: str = "_base_ts",
-) -> DataFrame:
+def enrich_raw(df: DataFrame, processed_at: str | None = None) -> DataFrame:
     """Full ParseRawEvent + EnrichStormEvent as ONE declarative select.
 
-    Input: a DataFrame with the 11 RAW_SCHEMA string columns plus a base
-    timestamp column (Kafka message time / fixture base date). Output: the
-    nested EVENT_SCHEMA layout (transform.go:37-47,148-161).
+    Input: a DataFrame with the 11 RAW_SCHEMA string columns plus the
+    `_base_ts` timestamp (Kafka message time / fixture base date). Output:
+    the nested EVENT_SCHEMA layout (transform.go:37-47,148-161).
 
     ``processed_at``: ISO timestamp string to freeze the clock (genmock
     pattern, cmd/genmock/main.go:60-64); None → current_timestamp().
@@ -388,8 +352,11 @@ def enrich_raw(
     CollapseProject keeps the stages intact because the aliases are
     non-cheap and multi-referenced.
 
-    Any SPLIT_COLS present in ``df`` lead the output unchanged; without
-    them the output is exactly EVENT_SCHEMA.
+    Pass-through rule: every input column it does not read (anything but
+    the RAW_SCHEMA fields and `_base_ts`: a row key, the streaming plan's
+    SPLIT_COLS) leads the output unchanged, in input order, ahead of the
+    EVENT_SCHEMA columns. An input with only raw columns yields exactly
+    EVENT_SCHEMA.
     """
     # All reference time math is UTC (transform.go:108-111,313): HHMM
     # expansion, RFC-3339 parse, and hourly buckets silently shift under a
@@ -397,13 +364,14 @@ def enrich_raw(
     # Pin it here so every caller — CLI, streaming, the driver's own
     # session — gets reference semantics.
     df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
+    read_cols = {*RAW_SCHEMA.fieldNames(), "_base_ts"}
     staged = df.withColumns(
         {
             "_lat": parse_float_or_zero("Lat"),
             "_lon": parse_float_or_zero("Lon"),
             "_raw_mag": magnitude_raw("EventType", "Size", "F_Scale", "Speed"),
             "_et_norm": normalize_event_type("EventType"),
-            "_etime": event_time(base_ts_col, "Time"),
+            "_etime": event_time("_base_ts", "Time"),
             # location parse staging: one trim + one regex-match per row;
             # the three field extracts below branch on the staged flag
             # instead of each re-running the match (6 regex evals → 4)
@@ -423,7 +391,7 @@ def enrich_raw(
     )
 
     return staged.select(
-        *[c for c in SPLIT_COLS if c in df.columns],
+        *[c for c in df.columns if c not in read_cols],
         event_id("EventType", "State", "_lat", "_lon", "Time", "_raw_mag").alias("id"),
         F.col("_et_norm").alias("event_type"),
         F.struct(F.col("_lat").alias("lat"), F.col("_lon").alias("lon")).alias("geo"),

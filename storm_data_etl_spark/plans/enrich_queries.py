@@ -3,8 +3,8 @@
 The driver's testdata has no storm table, so these queries carry their own
 golden input: a shared VALUES fixture (boundary rows distilled from the
 reference's transform_test.go tables, FIXTURES.md §5) evaluated by BOTH
-engines — the Spark side through the real `functions.enrich` expression
-library, the DuckDB side through an independently hand-written SQL
+engines — the Spark side through `enrich_raw`, the composition every
+caller ships, the DuckDB side through an independently hand-written SQL
 translation of /root/reference/internal/domain/transform.go semantics.
 A value-hash match certifies the whole enrichment dataflow (P2-P13) in the
 driver's correctness gate, not just in pytest.
@@ -211,36 +211,23 @@ def storm_enrich_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its own) may not be — pin before any timestamp literal is resolved.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     raw = golden_df(spark).withColumn("_base_ts", F.lit(BASE_TS).cast("timestamp"))
-    # Staged intermediates, same rationale as enrich_raw: inlined Column
-    # trees duplicate the when-chains into every consumer branch.
-    staged = (
-        raw.withColumns(
-            {
-                "_lat": E.parse_float_or_zero("Lat"),
-                "_lon": E.parse_float_or_zero("Lon"),
-                "_raw_mag": E.magnitude_raw("EventType", "Size", "F_Scale", "Speed"),
-                "_et_norm": E.normalize_event_type("EventType"),
-                "_etime": E.event_time("_base_ts", "Time"),
-            }
-        )
-        .withColumn("_unit", E.normalize_unit("_et_norm", F.lit("")))
-        .withColumn("_mag", E.normalize_magnitude("_et_norm", "_raw_mag", "_unit"))
-    )
-    return staged.select(
+    # The shipped composition itself; `rid` passes through it (enrich_raw's
+    # pass-through rule), and one select flattens the nested event.
+    return E.enrich_raw(raw).select(
         "rid",
-        E.event_id("EventType", "State", "_lat", "_lon", "Time", "_raw_mag").alias("id"),
-        F.col("_et_norm").alias("event_type"),
-        F.round("_lat", 6).alias("lat"),
-        F.round("_lon", 6).alias("lon"),
-        F.round("_mag", 6).alias("magnitude"),
-        F.col("_unit").alias("unit"),
-        E.derive_severity("_et_norm", "_mag").alias("severity"),
-        F.col("_etime").alias("event_time"),
-        E.parse_location_name("Location").alias("loc_name"),
-        E.parse_location_distance("Location").alias("loc_distance"),
-        E.parse_location_direction("Location").alias("loc_direction"),
-        F.col("State").alias("state"),
-        F.col("County").alias("county"),
-        E.extract_source_office("Comments").alias("source_office"),
-        E.time_bucket("_etime").alias("time_bucket"),
+        "id",
+        "event_type",
+        F.round("geo.lat", 6).alias("lat"),
+        F.round("geo.lon", 6).alias("lon"),
+        F.round("measurement.magnitude", 6).alias("magnitude"),
+        F.col("measurement.unit").alias("unit"),
+        F.col("measurement.severity").alias("severity"),
+        "event_time",
+        F.col("location.name").alias("loc_name"),
+        F.col("location.distance").alias("loc_distance"),
+        F.col("location.direction").alias("loc_direction"),
+        F.col("location.state").alias("state"),
+        F.col("location.county").alias("county"),
+        "source_office",
+        "time_bucket",
     )

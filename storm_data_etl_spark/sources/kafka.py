@@ -93,7 +93,7 @@ def read_kafka_stream(
     )
 
 
-def serialize_events(enriched: DataFrame, drop_zero_times: bool = True) -> DataFrame:
+def serialize_events(enriched: DataFrame) -> DataFrame:
     """S4: enriched events → Kafka message columns.
 
     key = id bytes; value = StormEvent JSON (RawPayload excluded — it never

@@ -71,15 +71,9 @@ LOCATION_CASES = [
 ]
 
 
-def test_parse_location(spark):
-    rows = [(loc,) for loc, _ in LOCATION_CASES]
-    df = spark.createDataFrame(rows, "loc string")
-    got = df.select(
-        E.parse_location_name("loc"),
-        E.parse_location_distance("loc"),
-        E.parse_location_direction("loc"),
-    ).collect()
-    assert [tuple(r) for r in got] == [exp for _, exp in LOCATION_CASES]
+def test_parse_location(enrich_locations):
+    got = enrich_locations([loc for loc, _ in LOCATION_CASES])
+    assert got == [exp for _, exp in LOCATION_CASES]
 
 
 # ------------------------------------------------------------- source office
@@ -346,3 +340,58 @@ def test_enrich_with_observation_metrics(spark):
     got = obs.get
     assert got["produced"] == 2
     assert got["null_severity"] == 0
+
+
+def test_enrich_raw_pass_through(spark):
+    """Input columns enrich_raw does not read lead the output unchanged;
+    raw-only input yields EVENT_SCHEMA's names and types (nullability
+    aside: geo and measurement.unit are never null)."""
+    from pyspark.sql import functions as F
+
+    from storm_data_etl_spark.functions.enrich import enrich_raw
+    from storm_data_etl_spark.plans.enrich_queries import BASE_TS, GOLDEN_ROWS, golden_df
+    from storm_data_etl_spark.schema import EVENT_SCHEMA
+
+    raw = golden_df(spark).withColumn("_base_ts", F.lit(BASE_TS).cast("timestamp"))
+    keyed = enrich_raw(raw)
+    assert keyed.columns == ["rid", *EVENT_SCHEMA.fieldNames()]
+    assert sorted(r.rid for r in keyed.select("rid").collect()) == [
+        row[0] for row in GOLDEN_ROWS
+    ]
+
+    def types(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    assert types(enrich_raw(raw.drop("rid")).schema) == types(EVENT_SCHEMA)
+
+
+def test_storm_enrich_golden_matches_oracle(spark):
+    """The registry's golden query runs enrich_raw over its inline VALUES
+    fixture; its independent DuckDB translation needs no tables, so the
+    registry's oracle comparison runs here in full."""
+    import importlib.util
+    import os
+
+    import duckdb
+
+    from storm_data_etl_spark.plans.enrich_queries import (
+        GOLDEN_ROWS,
+        _enrich_oracle_sql,
+        storm_enrich_golden,
+    )
+
+    spec = importlib.util.spec_from_file_location(
+        "oracle_check",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "tools", "oracle_check.py"),
+    )
+    oracle_check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(oracle_check)
+
+    sdf = storm_enrich_golden(spark, "")
+    res = duckdb.connect().execute(_enrich_oracle_sql())
+    dcols = [d[0] for d in res.description]
+    assert sorted(sdf.columns) == sorted(dcols)
+    got = oracle_check._canon(sdf.collect(), sdf.columns)
+    assert len(got) == len(GOLDEN_ROWS)
+    assert got == oracle_check._canon(res.fetchall(), dcols)

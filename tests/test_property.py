@@ -141,22 +141,14 @@ location_strings = st.one_of(
 
 @SETTINGS
 @given(st.lists(location_strings, min_size=1, max_size=60))
-def test_parse_location_parity(spark, cases):
+def test_parse_location_parity(enrich_locations, cases):
     # Domain notes: (a) Python \d matches Unicode digits Java rejects;
     # (b) Java's trim() strips all chars ≤ U+0020 (incl. control chars)
     # where Go's TrimSpace strips only Unicode whitespace. Both diverge only
     # outside printable-ASCII NOAA content — pin that domain (documented in
     # enrich.py module docstring).
     cases = [c for c in cases if c.isascii() and c.isprintable() or c == ""]
-    df = spark.createDataFrame([(c,) for c in cases], "loc string")
-    got = [
-        (r[0], r[1], r[2])
-        for r in df.select(
-            E.parse_location_name("loc"),
-            E.parse_location_distance("loc"),
-            E.parse_location_direction("loc"),
-        ).collect()
-    ]
+    got = enrich_locations(cases)
     exp = [py_parse_location(c) for c in cases]
     assert got == exp, [z for z in zip(cases, got, exp) if z[1] != z[2]]
 

@@ -92,9 +92,11 @@ def main() -> int:
         "(equi-join on bucket id)",
     )
 
-    # 8. Enrichment plan stays deduplicated: the staged intermediates keep
-    # each when-chain/regex at one copy; inlining regressions blow this up
-    # (162 regexp_replace nodes before the fix).
+    # 8. Enrichment plan stays deduplicated: the golden runner is
+    # enrich_raw plus a flattening select, so this audits enrich_raw's own
+    # plan. The staged intermediates keep each when-chain/regex at one copy;
+    # inlining regressions blow this up (162 regexp_replace nodes before the
+    # fix).
     p = qs["storm_enrich_golden"](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
     check(
         "enrich_plan_deduplicated",
