@@ -18,16 +18,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Importing the plans modules populates the registry.
-from storm_data_etl_spark.plans import queries as _q
-from storm_data_etl_spark.plans import enrich_queries as _eq  # noqa: F401
-from storm_data_etl_spark.plans import ml_queries as _mq  # noqa: F401
-from storm_data_etl_spark.plans import window_queries as _wq  # noqa: F401
-from storm_data_etl_spark.plans import lake_queries as _lq  # noqa: F401
-from storm_data_etl_spark.plans import corpus_queries as _cq  # noqa: F401
-from storm_data_etl_spark.plans import geo_queries as _gq  # noqa: F401
-from storm_data_etl_spark.plans import retrieval_queries as _rq  # noqa: F401
-from storm_data_etl_spark.plans import sft_queries as _sft  # noqa: F401
+from storm_data_etl_spark.plans import load_all
+
+_REGISTRY = load_all()
 
 SF_SMOKE_DIR = "/root/testdata/sf0.001"
 
@@ -115,15 +108,15 @@ def _priority() -> list[str]:
     rows-only queries — last, because a re-run can only ever reproduce
     their weaker rows-only record and would waste a hash-proof slot."""
     newest = _newest_pass_round()
-    names = list(_q.REGISTRY)
+    names = list(_REGISTRY)
     never = [n for n in names if n not in newest]
     gated = [n for n in names if n in newest]
     oracle_backed = sorted(
-        (n for n in gated if _q.REGISTRY[n].oracle is not None),
+        (n for n in gated if _REGISTRY[n].oracle is not None),
         key=lambda n: (newest[n], n),
     )
     rows_only = sorted(
-        (n for n in gated if _q.REGISTRY[n].oracle is None),
+        (n for n in gated if _REGISTRY[n].oracle is None),
         key=lambda n: (newest[n], n),
     )
     max_round = max(newest.values(), default=0)
@@ -152,14 +145,14 @@ def never_gated() -> list[str]:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the TPC-H-Q1-style pricing summary at sf0.001."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return _q.REGISTRY["pricing_summary"].runner(spark, SF_SMOKE_DIR)
+    return _REGISTRY["pricing_summary"].runner(spark, SF_SMOKE_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _q.REGISTRY[name].runner for name in _priority()}
+    return {name: _REGISTRY[name].runner for name in _priority()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: qd.oracle for name, qd in _q.REGISTRY.items() if qd.oracle is not None
+        name: qd.oracle for name, qd in _REGISTRY.items() if qd.oracle is not None
     }

@@ -27,17 +27,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from storm_data_etl_spark.session import get_spark, release_pinned
-from storm_data_etl_spark.plans import queries as _q
-from storm_data_etl_spark.plans import enrich_queries as _eq  # noqa: F401
-from storm_data_etl_spark.plans import ml_queries as _mq  # noqa: F401
-from storm_data_etl_spark.plans import window_queries as _wq  # noqa: F401
-from storm_data_etl_spark.plans import lake_queries as _lq  # noqa: F401
-from storm_data_etl_spark.plans import corpus_queries as _cq  # noqa: F401
-from storm_data_etl_spark.plans import geo_queries as _gq  # noqa: F401
-from storm_data_etl_spark.plans import retrieval_queries as _rq  # noqa: F401
-from storm_data_etl_spark.plans import sft_queries as _sft  # noqa: F401
+from storm_data_etl_spark.plans import load_all
 from storm_data_etl_spark.plans.tables import t
 from storm_data_etl_spark.functions.enrich import enrich_envelope
+
+_REGISTRY = load_all()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -516,7 +510,7 @@ def main() -> None:
     spark = get_spark("bench", master=f"local[{CPUS}]")
     sf = SF_DIR.rstrip("/").split("sf")[-1]
 
-    runners = {name: _q.REGISTRY[name].runner for name in HEADLINE if name in _q.REGISTRY}
+    runners = {name: _REGISTRY[name].runner for name in HEADLINE if name in _REGISTRY}
     runners["enrich_throughput"] = enrich_throughput
 
     # Dev-loop subset filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those
@@ -533,7 +527,7 @@ def main() -> None:
     def _time_set(names: list[str]) -> dict[str, float]:
         out: dict[str, float] = {}
         for cname in names:
-            cdf = _q.REGISTRY[cname].runner(spark, SF_DIR)
+            cdf = _REGISTRY[cname].runner(spark, SF_DIR)
             cbest = float("inf")
             for _ in range(3):
                 cstart = time.perf_counter()
@@ -569,7 +563,7 @@ def main() -> None:
     # early headline windows.
     if not only_set:
         for cname in CANARY:
-            _q.REGISTRY[cname].runner(spark, SF_DIR).write.format("noop").mode(
+            _REGISTRY[cname].runner(spark, SF_DIR).write.format("noop").mode(
                 "overwrite"
             ).save()
             release_pinned()
@@ -640,7 +634,7 @@ def main() -> None:
     # each entry behind try/except.
     index_builds: dict[str, dict[str, float]] = {}
     for name in INDEX_BUILDS:
-        if name not in _q.REGISTRY or (only_set and name not in only_set):
+        if name not in _REGISTRY or (only_set and name not in only_set):
             continue
         index_builds[name] = {}
         for ib_dir in INDEX_BUILD_SFS:
@@ -649,7 +643,7 @@ def main() -> None:
             ib_sf = ib_dir.rstrip("/").split("sf")[-1]
             try:
                 start = time.perf_counter()
-                _q.REGISTRY[name].runner(spark, ib_dir).write.format("noop").mode(
+                _REGISTRY[name].runner(spark, ib_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 index_builds[name][ib_sf] = round(time.perf_counter() - start, 3)

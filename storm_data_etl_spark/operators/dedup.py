@@ -99,6 +99,23 @@ def ngram_jaccard_pairs(
     (transform, not array_distinct), so row multisets are bit-identical
     to the exploded form.
     """
+    jac = (
+        _shingle_overlap(df, text_col, id_col, k)
+        .withColumn(
+            "jaccard",
+            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+    return jac.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(id_a, id_b, n_common, n_a, n_b) for every pair id_a < id_b sharing
+    at least one shingle: the inverted-index count behind
+    `ngram_jaccard_pairs` and `containment_pairs`, which differ only in
+    the score they compute from these counts (plan shape: see
+    `ngram_jaccard_pairs`)."""
     base = _pin(
         df.select(
             F.col(id_col).alias("id"),
@@ -119,16 +136,7 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
-    jac = (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return jac.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return common.join(sa, "id_a").join(sb, "id_b")
 
 
 def jaccard_prefix_pairs(
@@ -260,29 +268,8 @@ def containment_pairs(
     scale analysis there applies unchanged. Output (id_a, id_b, containment)
     with id_a < id_b, containment rounded to 6 places.
     """
-    base = _pin(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.transform(X.shingles(text_col, k), lambda s: F.xxhash64(s)).alias(
-                "harr"
-            ),
-        )
-    )
-    sh = base.select("id", F.explode("harr").alias("shingle"))
-    sh = _pin(sh.repartition("shingle"))
-    sizes = base.select("id", F.size("harr").cast("long").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     cont = (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, text_col, id_col, k)
         .withColumn("containment", F.col("n_common") / F.least("n_a", "n_b"))
         .filter(F.col("containment") >= threshold)
     )
@@ -598,7 +585,7 @@ def oph_verified_pairs(
 
 
 def connected_components(
-    pairs: DataFrame, max_iter: int = 25, id_a: str = "id_a", id_b: str = "id_b"
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components over an undirected pair list: every node gets
     ``component`` = the minimum id reachable from it. This closes the gap
@@ -607,13 +594,14 @@ def connected_components(
     edge.
 
     Algorithm: iterative min-label propagation (label := min(label,
-    neighbors' labels)) until a fixpoint, detected by the strictly
-    decreasing sum of labels. Converges in O(graph diameter) rounds; dedup
-    graphs are near-cliques, so 2-3 rounds in practice. Each round is one
-    shuffle-join on uniformly distributed ids; `localCheckpoint` cuts the
-    growing lineage so round N doesn't recompute rounds 1..N-1. At extreme
-    scale the two-phase large-star/small-star formulation (O(log n) rounds
-    on high-diameter graphs) drops in behind the same signature.
+    neighbors' labels)) until the fixpoint, detected by the sum of labels
+    no longer falling. Labels only ever decrease, so the sum strictly falls
+    every round until no label changes: the loop always terminates, in at
+    most graph diameter + 1 rounds (a path numbered 0..n-1 in order takes
+    n). Dedup graphs are near-cliques, so 2-3 rounds in practice. Each
+    round is one shuffle-join on uniformly distributed ids;
+    `localCheckpoint` cuts the growing lineage so round N doesn't
+    recompute rounds 1..N-1.
 
     Output: (id, component) for every id appearing in ``pairs``; callers
     left-join singletons back with component = own id.
@@ -628,7 +616,7 @@ def connected_components(
         edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
     ).localCheckpoint()
     prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(max_iter):
+    while True:
         neighbor_min = (
             edges.join(
                 labels.select(F.col("id").alias("dst"), F.col("label").alias("nlabel")),
@@ -653,100 +641,6 @@ def connected_components(
         prev_sum = cur_sum
     edges.unpersist()
     return labels.select("id", F.col("label").alias("component"))
-
-
-def _edge_signature(edges: DataFrame) -> tuple[int, int]:
-    """Order-insensitive fingerprint of an edge set (count, hash-sum)."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # bit_xor: commutative, associative, overflow-free under ANSI mode
-        # (a hash-SUM would throw ARITHMETIC_OVERFLOW on 64-bit hashes)
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).first()
-    return row["n"], row["h"]
-
-
-def connected_components_star(
-    pairs: DataFrame, max_iter: int = 30, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    O(log n)-round formulation that `connected_components`' min-label
-    propagation (O(diameter) rounds) needs behind it for adversarial
-    high-diameter graphs at 100 TB scale.
-
-    One round = two grouped passes over the edge list:
-      large-star: every node links its LARGER neighbors to the smallest
-        member of its neighborhood (incl. itself) — long chains contract
-        toward minima in parallel;
-      small-star: every node links its smaller-or-equal neighbors to that
-        minimum — stars flatten.
-    The edge set converges to a star forest: (node → component minimum).
-    Each pass is one shuffle on node id (uniform keys); `localCheckpoint`
-    cuts lineage per round; convergence is an O(1)-state fingerprint
-    compare, not a join-and-diff.
-
-    Output: (id, component) for every id in ``pairs`` — identical contract
-    (and, by the equivalence tests, identical output) to
-    `connected_components`.
-    """
-    def sym(e: DataFrame) -> DataFrame:
-        return (
-            e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-
-    def with_min(e: DataFrame) -> DataFrame:
-        # (u, v, m) rows where m = min(Γ(u) ∪ {u}); e is symmetric so the
-        # grouped min sees every adjacency.
-        m = (
-            e.groupBy("src")
-            .agg(F.min("dst").alias("_nmin"))
-            .select(
-                F.col("src").alias("u"),
-                F.least(F.col("_nmin"), F.col("src")).alias("m"),
-            )
-        )
-        return e.join(m, e["src"] == m["u"], "inner").select(
-            F.col("src").alias("u"), F.col("dst").alias("v"), "m"
-        )
-
-    edges = sym(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    ).localCheckpoint()
-    nodes = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    sig = _edge_signature(edges)
-    for _ in range(max_iter):
-        # large-star: every strictly-larger neighbor of u links to m(u)
-        wm = with_min(edges)
-        large = wm.filter(F.col("v") > F.col("u")).select(
-            F.col("v").alias("src"), F.col("m").alias("dst")
-        )
-        edges = sym(large).localCheckpoint()
-        # small-star: every smaller neighbor of u (and u itself) links to m(u)
-        wm = with_min(edges)
-        small = wm.filter(F.col("v") < F.col("u")).select(
-            F.col("v").alias("src"), F.col("m").alias("dst")
-        )
-        own = wm.select(F.col("u").alias("src"), F.col("m").alias("dst")).distinct()
-        edges = sym(small.union(own)).localCheckpoint()
-        new_sig = _edge_signature(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    # Star forest: each node's component is its minimum neighbor, or itself
-    # for roots; nodes whose component collapsed onto them keep themselves.
-    comp = (
-        nodes.join(edges, nodes["id"] == edges["src"], "left")
-        .groupBy("id")
-        .agg(F.min("dst").alias("_m"))
-        .select(
-            "id",
-            F.least(F.coalesce(F.col("_m"), F.col("id")), F.col("id")).alias("component"),
-        )
-    )
-    return comp
 
 
 def dedup_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -26,7 +26,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    persist: bool = True,
     checkpoint_interval: int = 5,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list (`src`, `dst`).
@@ -40,9 +39,8 @@ def pagerank(
     The unrolled plan references the node set once per iteration and the
     degree-joined edge list in every contribution join — without
     materialization Spark recomputes the (possibly expensive) upstream
-    edge derivation for each reference. ``persist=True`` caches both
-    loop invariants (MEMORY_AND_DISK; callers doing one-shot runs can
-    opt out), and ranks are ``localCheckpoint``ed every
+    edge derivation for each reference. Both loop invariants are pinned
+    (MEMORY_AND_DISK), and ranks are ``localCheckpoint``ed every
     ``checkpoint_interval`` rounds so deep iteration counts don't build
     an unboundedly nested plan.
     """
@@ -54,19 +52,18 @@ def pagerank(
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_outdeg"))
     e = edges.join(deg, "src")
-    if persist:
-        # loop invariants consumed lazily by the returned ranks — the
-        # caller owns the cache lifetime (session.release_pinned()).
-        # Optimization r12 (guide §2.4, "two operations keyed the same way
-        # share one exchange"): pin the invariants ALREADY partitioned on
-        # their loop join keys — e on src (the contribution join's key),
-        # nodes on node (the rank join's key). Every per-round join then
-        # finds both sides co-partitioned (ranks inherits hash(node) from
-        # the previous round's join and the rename to src is alias-aware),
-        # so the only exchange left per iteration is the unavoidable
-        # contribution re-key dst -> node.
-        nodes = _pin(nodes.repartition("node"))
-        e = _pin(e.repartition("src"))
+    # loop invariants consumed lazily by the returned ranks — the
+    # caller owns the cache lifetime (session.release_pinned()).
+    # Optimization r12 (guide §2.4, "two operations keyed the same way
+    # share one exchange"): pin the invariants ALREADY partitioned on
+    # their loop join keys — e on src (the contribution join's key),
+    # nodes on node (the rank join's key). Every per-round join then
+    # finds both sides co-partitioned (ranks inherits hash(node) from
+    # the previous round's join and the rename to src is alias-aware),
+    # so the only exchange left per iteration is the unavoidable
+    # contribution re-key dst -> node.
+    nodes = _pin(nodes.repartition("node"))
+    e = _pin(e.repartition("src"))
     ranks = nodes.withColumn("rank", F.lit(1.0))
     for i in range(iterations):
         contribs = (
@@ -93,7 +90,6 @@ def pagerank(
 def label_propagation(
     edges: DataFrame,
     iterations: int = 2,
-    persist: bool = True,
     checkpoint_interval: int = 5,
 ) -> DataFrame:
     """Synchronous label-propagation community detection over an undirected
@@ -107,7 +103,7 @@ def label_propagation(
 
     Per round: one shuffle joining labels to edges on dst, one grouped
     count on (src, label), one row_number window on src — all uniform
-    keys. The symmetric edge list is the loop invariant (persisted);
+    keys. The symmetric edge list is the loop invariant (pinned);
     labels are localCheckpoint'ed every ``checkpoint_interval`` rounds
     (same lineage regime as `pagerank`).
     """
@@ -116,11 +112,10 @@ def label_propagation(
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
     )
-    if persist:
-        # Optimization r12 (guide §2.4): pin the symmetric edge list
-        # partitioned on the per-round join key so the corpus-sized side
-        # never re-shuffles inside the loop.
-        sym = _pin(sym.repartition("dst"))
+    # Optimization r12 (guide §2.4): pin the symmetric edge list
+    # partitioned on the per-round join key so the corpus-sized side
+    # never re-shuffles inside the loop.
+    sym = _pin(sym.repartition("dst"))
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -205,7 +200,6 @@ def bfs_layers(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 4,
-    persist: bool = True,
 ) -> DataFrame:
     """Breadth-first hop distances from a seed set over a directed edge
     list (`src`, `dst`): returns (node, dist) with dist = the minimum hop
@@ -220,9 +214,7 @@ def bfs_layers(
     never nests ``max_hops`` joins deep. This is the distributed BFS a
     100 TB graph needs: per-round cost is |frontier-adjacent edges|, and
     every shuffle keys on the node id."""
-    edges = edges.select("src", "dst")
-    if persist:
-        edges = _pin(edges)
+    edges = _pin(edges.select("src", "dst"))
     visited = seeds.select(F.col("node")).distinct().withColumn(
         "dist", F.lit(0)
     )

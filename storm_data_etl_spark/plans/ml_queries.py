@@ -10,7 +10,7 @@ IS oracle-checked here.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from storm_data_etl_spark.functions import text as X
@@ -3806,6 +3806,122 @@ def chunk_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------
+# Certified LCG sketch steps, shared by minhash_lcg_lsh_pairs,
+# oph_lcg_lsh_pairs and lsh_s_curve (their DuckDB oracles spell the same
+# steps in SQL). The queries pin whichever step feeds several consumers.
+# ---------------------------------------------------------------------
+
+_LCG_P = 2147483647  # 2^31 - 1
+
+
+def _lcg_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (id, shingle) word 3-grams of `documents`."""
+    return (
+        t(spark, sf_dir, "documents")
+        .select(F.col("doc_id").alias("id"), X.shingles("text", 3).alias("shingles"))
+        .select("id", F.explode("shingles").alias("shingle"))
+        .distinct()
+    )
+
+
+def _poly_hash(col: str) -> Column:
+    """Portable shingle hash: fold (acc·31 + codepoint) mod p over the
+    characters — both engines split to identical codepoints."""
+    return F.aggregate(
+        F.split(col, ""),
+        F.lit(0).cast("long"),
+        lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(_LCG_P).cast("long"),
+    )
+
+
+def _lcg_minima(sh: DataFrame) -> DataFrame:
+    """(id, i, minh): per doc, the minimum over its shingles of the 16
+    LCG-family hashes h_i(x) = (a_i mod p)·x mod p + b_i, x = `_poly_hash`."""
+    P = _LCG_P
+    hashed = (
+        sh.select("id", _poly_hash("shingle").alias("sid"))
+        .select(
+            "id",
+            F.posexplode(F.sequence(F.lit(0), F.lit(15))).alias("i", "_i2"),
+            "sid",
+        )
+        .select(
+            "id",
+            "i",
+            (
+                ((F.lit(1103515245).cast("long") * (F.col("i") + 1) + 12345) % P)
+                * F.col("sid").cast("long") % P
+                + (F.lit(12345).cast("long") * (F.col("i") + 1) + 999331) % P
+            ).alias("raw"),
+        )
+    )
+    return hashed.groupBy("id", "i").agg((F.min(F.col("raw") % P)).alias("minh"))
+
+
+def _band_key(pos: str, val: str) -> Column:
+    """Aggregate: a band's minima ordered by signature position, joined
+    as 'm:m:...'."""
+    return F.array_join(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(pos, F.col(val).alias("m")))),
+            lambda x: x["m"].cast("string"),
+        ),
+        ":",
+    )
+
+
+def _band_candidates(bands: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_shared_bands) over a (id, band, band_key) table:
+    pairs id_a < id_b with equal keys in at least one band."""
+    a = bands.select(
+        F.col("id").alias("id_a"),
+        F.col("band").alias("band_a"),
+        F.col("band_key").alias("k_a"),
+    )
+    b = bands.select(
+        F.col("id").alias("id_b"),
+        F.col("band").alias("band_b"),
+        F.col("band_key").alias("k_b"),
+    )
+    return (
+        a.join(
+            b,
+            (F.col("band_a") == F.col("band_b"))
+            & (F.col("k_a") == F.col("k_b"))
+            & (F.col("id_a") < F.col("id_b")),
+        )
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
+
+
+def _match_estimate(cand: DataFrame, sig: DataFrame, pos: str, val: str) -> DataFrame:
+    """(id_a, id_b, n_shared_bands, est_jaccard_e4) per candidate pair: the
+    estimate is the share of the 16 signature positions where the two
+    docs' values agree, in exact integer e4."""
+    sa = sig.select(F.col("id").alias("id_a"), F.col(pos).alias(pos), F.col(val).alias("ma"))
+    sb = sig.select(
+        F.col("id").alias("sb_id"), F.col(pos).alias(pos + "b"), F.col(val).alias("mb")
+    )
+    matches = (
+        cand.join(sa, "id_a")
+        .join(sb, (F.col("id_b") == F.col("sb_id")) & (F.col(pos) == F.col(pos + "b")))
+        .groupBy("id_a", "id_b", "n_shared_bands")
+        .agg(
+            F.sum((F.col("ma") == F.col("mb")).cast("int"))
+            .cast("bigint")
+            .alias("n_match")
+        )
+    )
+    return matches.select(
+        "id_a",
+        "id_b",
+        "n_shared_bands",
+        F.expr("(10000 * n_match) div 16").cast("bigint").alias("est_jaccard_e4"),
+    )
+
+
 @register(
     "minhash_lcg_lsh_pairs",
     f"""
@@ -3886,94 +4002,18 @@ def minhash_lcg_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, bounded pair agg; no dictionary, no global sort. The
     xxhash64 path stays the production form only because one built-in
     hash call beats a per-character fold; the dataflow is identical."""
-    docs = t(spark, sf_dir, "documents")
-    P = 2147483647
-    sh = (
-        docs.select(
-            F.col("doc_id").alias("id"), X.shingles("text", 3).alias("shingles")
-        )
-        .select("id", F.explode("shingles").alias("shingle"))
-        .distinct()
-    )
-    ids = sh.select(
-        "id",
-        F.aggregate(
-            F.split("shingle", ""),
-            F.lit(0).cast("long"),
-            lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(P).cast("long"),
-        ).alias("sid"),
-    )
-    hashed = ids.select(
-        "id",
-        F.posexplode(F.sequence(F.lit(0), F.lit(15))).alias("i", "_i2"),
-        "sid",
-    ).select(
-        "id",
-        "i",
-        (
-            ((F.lit(1103515245).cast("long") * (F.col("i") + 1) + 12345) % P)
-            * F.col("sid").cast("long") % P
-            + (F.lit(12345).cast("long") * (F.col("i") + 1) + 999331) % P
-        ).alias("raw"),
-    )
     # The signature table feeds FOUR consumers (band sides a/b, match
     # legs sa/sb) — without a pin the whole shingle+fold+explode subtree
     # re-evaluates per consumer (measured 4x = ~8 s at sf0.1; pinned
     # ~3.4 s). 80k small rows; released via session.release_pinned().
-    sig = _pin(hashed.groupBy("id", "i").agg((F.min(F.col("raw") % P)).alias("minh")))
-    band_key = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("i").alias("i"), F.col("minh").alias("m")))
-            ),
-            lambda x: x["m"].cast("string"),
-        ),
-        ":",
-    )
+    sig = _pin(_lcg_minima(_lcg_shingles(spark, sf_dir)))
     bands = sig.groupBy("id", F.expr("i div 4").alias("band")).agg(
-        band_key.alias("band_key")
+        _band_key("i", "minh").alias("band_key")
     )
     # Optimization r12 (guide §2.4): both self-join sides re-ran the band
     # aggregate over the pinned signatures — pin the small band table too.
     bands = _pin(bands)
-    a = bands.select(
-        F.col("id").alias("id_a"),
-        F.col("band").alias("band_a"),
-        F.col("band_key").alias("k_a"),
-    )
-    b = bands.select(
-        F.col("id").alias("id_b"),
-        F.col("band").alias("band_b"),
-        F.col("band_key").alias("k_b"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("k_a") == F.col("k_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    sa = sig.select(F.col("id").alias("id_a"), F.col("i").alias("i"), F.col("minh").alias("ma"))
-    sb = sig.select(F.col("id").alias("sb_id"), F.col("i").alias("ib"), F.col("minh").alias("mb"))
-    matches = (
-        cand.join(sa, "id_a")
-        .join(sb, (F.col("id_b") == F.col("sb_id")) & (F.col("i") == F.col("ib")))
-        .groupBy("id_a", "id_b", "n_shared_bands")
-        .agg(
-            F.sum((F.col("ma") == F.col("mb")).cast("int"))
-            .cast("bigint")
-            .alias("n_match")
-        )
-    )
-    return matches.select(
-        "id_a",
-        "id_b",
-        "n_shared_bands",
-        F.expr("(10000 * n_match) div 16").cast("bigint").alias("est_jaccard_e4"),
-    )
+    return _match_estimate(_band_candidates(bands), sig, "i", "minh")
 
 
 @register(
@@ -4665,25 +4705,26 @@ def matryoshka_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_lcg_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup candidates with FULLY ORACLE-BACKED hash
     arithmetic — the simhash twin of minhash_lcg_lsh_pairs. Features are
-    distinct character 4-grams identified BY THEIR HASH PAIR (two
-    fixed-degree polynomials over the 4 codepoints, mod two distinct
-    31-bit primes) — no gram strings, no arrays, no higher-order
-    functions: the whole feature+vote pipeline is whole-stage codegen
-    (the first HOF formulation measured 20+ s at sf0.1; this one ~2 s).
-    The 60 bit votes are 60 conditional sums in one per-doc aggregate,
-    packed into two 30-bit integers; banding keys are bit slices,
+    distinct character 4-grams of lower(trim(text)) identified BY THEIR
+    HASH PAIR (two fixed-degree polynomials over the 4 codepoints, mod two
+    distinct 31-bit primes). One pinned Arrow kernel (`mapInPandas`, the
+    r12 plan) turns each doc into its fingerprint: the per-position hashes
+    are windowed int64 dot products, the distinct features a local
+    np.unique, and the 60 bit votes vectorized popcounts packed into two
+    30-bit integers (lo, hi). Banding keys are 15-bit slices of (lo, hi),
     buckets holding > 50 fingerprints are skipped (the standard
     boilerplate-bucket guard — correlated fingerprints otherwise
     degenerate a 15-bit band toward all-pairs), and Hamming distance is
     two XOR popcounts. Emission keeps Hamming <= 3, where the 4x15
     pigeonhole guarantees banding recall within non-skipped buckets.
 
-    Scale shape: one scan → position explode (len-3 rows, all codegen) →
-    distinct on (doc, h1, h2) → 60-sum aggregate → integer-key banding
-    with the bucket cap → popcount verify on bounded candidates. The
-    xxhash64 path (simhash_candidates, rows-only) stays the production
-    form; this is its certification regime. Docs shorter than 4 chars
-    carry no 4-gram and are excluded by definition."""
+    Scale shape: one scan → one Arrow kernel pass per partition (no
+    position explode, no corpus-wide feature DISTINCT, no vote
+    aggregate; only (doc_id, lo, hi) rows ever shuffle) → integer-key
+    banding with the bucket cap → popcount verify on bounded candidates.
+    The xxhash64 path (simhash_candidates, rows-only) stays the
+    production form; this is its certification regime. Docs shorter than
+    4 chars carry no 4-gram and are excluded by definition."""
     P1, P2 = 2147483647, 2147483629
     base = (
         t(spark, sf_dir, "documents")
@@ -4886,24 +4927,8 @@ def oph_lcg_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded 16x16 per doc, banding is the standard equi-join. The
     xxhash64 OPH path stays the production form; recall vs exact is
     pinned in pytest there, signature arithmetic is hash-gated here."""
-    P = 2147483647
-    C = 2654435761 % P
-    docs = t(spark, sf_dir, "documents")
-    sh = (
-        docs.select(
-            F.col("doc_id").alias("id"), X.shingles("text", 3).alias("shingles")
-        )
-        .select("id", F.explode("shingles").alias("shingle"))
-        .distinct()
-    )
-    hashed = sh.select(
-        "id",
-        F.aggregate(
-            F.split("shingle", ""),
-            F.lit(0).cast("long"),
-            lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(P).cast("long"),
-        ).alias("h"),
-    )
+    C = 2654435761 % _LCG_P
+    hashed = _lcg_shingles(spark, sf_dir).select("id", _poly_hash("shingle").alias("h"))
     # mins feeds THREE consumers (slots, the borrow join, and the
     # all-bins id domain) — pin it or the whole shingle+fold pipeline
     # re-evaluates per consumer (measured 3x ≈ 9.6 s warm at sf0.1;
@@ -4938,69 +4963,17 @@ def oph_lcg_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id",
             "bin",
-            ((F.col("pick.v") + F.col("pick.d") * F.lit(C)) % P).alias("mh"),
+            ((F.col("pick.v") + F.col("pick.d") * F.lit(C)) % _LCG_P).alias("mh"),
         )
     )
     sig = slots.filter(F.col("mh").isNotNull()).select("id", "bin", "mh").unionByName(
         borrowed
     )
     sig = _pin(sig)
-    band_key = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("bin").alias("b"), F.col("mh").alias("m"))
-                )
-            ),
-            lambda x: x["m"].cast("string"),
-        ),
-        ":",
-    )
     bands = sig.groupBy("id", F.expr("bin div 4").alias("band")).agg(
-        band_key.alias("band_key")
+        _band_key("bin", "mh").alias("band_key")
     )
-    a = bands.select(
-        F.col("id").alias("id_a"),
-        F.col("band").alias("band_a"),
-        F.col("band_key").alias("k_a"),
-    )
-    b = bands.select(
-        F.col("id").alias("id_b"),
-        F.col("band").alias("band_b"),
-        F.col("band_key").alias("k_b"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("k_a") == F.col("k_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    sa = sig.select(
-        F.col("id").alias("id_a"), F.col("bin").alias("bin"), F.col("mh").alias("ma")
-    )
-    sb = sig.select(
-        F.col("id").alias("sb_id"), F.col("bin").alias("binb"), F.col("mh").alias("mb")
-    )
-    matches = (
-        cand.join(sa, "id_a")
-        .join(sb, (F.col("id_b") == F.col("sb_id")) & (F.col("bin") == F.col("binb")))
-        .groupBy("id_a", "id_b", "n_shared_bands")
-        .agg(
-            F.sum((F.col("ma") == F.col("mb")).cast("int"))
-            .cast("bigint")
-            .alias("n_match")
-        )
-    )
-    return matches.select(
-        "id_a",
-        "id_b",
-        "n_shared_bands",
-        F.expr("(10000 * n_match) div 16").cast("bigint").alias("est_jaccard_e4"),
-    )
+    return _match_estimate(_band_candidates(bands), sig, "bin", "mh")
 
 
 @register(
@@ -6310,52 +6283,13 @@ def lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; production keeps (4,4) and never materializes truth. The r=1
     config is deliberately included as the flood case the curve warns
     about."""
-    docs = t(spark, sf_dir, "documents")
-    P = 2147483647
-    sh = (
-        docs.select(
-            F.col("doc_id").alias("id"), X.shingles("text", 3).alias("shingles")
-        )
-        .select("id", F.explode("shingles").alias("shingle"))
-        .distinct()
-    )
-    sh = _pin(sh)  # feeds signature + sizes + intersection legs
-    ids = sh.select(
-        "id",
-        F.aggregate(
-            F.split("shingle", ""),
-            F.lit(0).cast("long"),
-            lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(P).cast("long"),
-        ).alias("sid"),
-    )
-    hashed = ids.select(
-        "id",
-        F.posexplode(F.sequence(F.lit(0), F.lit(15))).alias("i", "_i2"),
-        "sid",
-    ).select(
-        "id",
-        "i",
-        (
-            ((F.lit(1103515245).cast("long") * (F.col("i") + 1) + 12345) % P)
-            * F.col("sid").cast("long") % P
-            + (F.lit(12345).cast("long") * (F.col("i") + 1) + 999331) % P
-        ).alias("raw"),
-    )
-    sig = hashed.groupBy("id", "i").agg((F.min(F.col("raw") % P)).alias("minh"))
+    sh = _pin(_lcg_shingles(spark, sf_dir))  # feeds signature + sizes + intersection legs
+    sig = _lcg_minima(sh)
     configs = spark.createDataFrame([(1,), (2,), (4,), (8,)], "r int")
-    band_key = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("i").alias("i"), F.col("minh").alias("m")))
-            ),
-            lambda x: x["m"].cast("string"),
-        ),
-        ":",
-    )
     bands = (
         sig.crossJoin(F.broadcast(configs))
         .groupBy("r", "id", F.expr("i div r").alias("band"))
-        .agg(band_key.alias("band_key"))
+        .agg(_band_key("i", "minh").alias("band_key"))
     )
     bands = _pin(bands)  # both self-join legs
     a = bands.select(

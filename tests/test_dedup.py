@@ -141,9 +141,27 @@ def test_dedup_by_pairs_keeps_min_representative(spark):
     assert out == [0, 1, 2]
 
 
-def test_star_cc_equals_propagation(spark):
-    import random
+def _union_find_components(edges):
+    """Reference model: node -> minimum node id of its component."""
+    parent = {}
 
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def test_connected_components_matches_union_find(spark):
+    """Propagation runs to its fixpoint: the 40-node path (diameter 39)
+    needs 40 rounds, more than any fixed round cap short of that."""
     rng = random.Random(11)
     graphs = {
         "path": [(i, i + 1) for i in range(12)],
@@ -152,17 +170,12 @@ def test_star_cc_equals_propagation(spark):
         + [(a, b) for a in range(10, 14) for b in range(a + 1, 14)],
         "random": list({tuple(sorted(rng.sample(range(60), 2))) for _ in range(45)}),
         "descending_path": [(i + 1, i) for i in range(10, 20)],
+        "path_40": [(i, i + 1) for i in range(39)],
     }
-    from storm_data_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
     for name, edges in graphs.items():
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = {r.id: r.component for r in connected_components(pairs).collect()}
-        b = {r.id: r.component for r in connected_components_star(pairs).collect()}
-        assert a == b, f"{name}: propagation={a} star={b}"
+        got = {r.id: r.component for r in D.connected_components(pairs).collect()}
+        assert got == _union_find_components(edges), name
 
 
 def test_prefix_filtered_equals_all_pairs(spark, sf_dir):

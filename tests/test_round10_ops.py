@@ -7,10 +7,9 @@ from __future__ import annotations
 
 import datetime as dt
 
-from storm_data_etl_spark.plans import corpus_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import ml_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import queries as Q
-from storm_data_etl_spark.plans import window_queries  # noqa: F401 (registry)
+from storm_data_etl_spark.plans import load_all
+
+REGISTRY = load_all()
 
 
 TS10 = dt.datetime(2024, 1, 1, 12)
@@ -54,7 +53,7 @@ def test_stream_replay_dedup_hand_trace(spark, tmp_path):
             r.emitted,
             r.emitted_event_id,
         )
-        for r in Q.REGISTRY["stream_replay_dedup"].runner(
+        for r in REGISTRY["stream_replay_dedup"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -89,7 +88,7 @@ def test_bpe_train_apply_hand_merges(spark, tmp_path):
     import duckdb
 
     _write_docs(spark, tmp_path, [(1, "ab ab ab b", "en", "s", 10)])
-    r = Q.REGISTRY["bpe_train_apply"].runner(spark, str(tmp_path)).collect()
+    r = REGISTRY["bpe_train_apply"].runner(spark, str(tmp_path)).collect()
     assert len(r) == 1
     row = r[0]
     us, rs = chr(31), chr(30)
@@ -103,7 +102,7 @@ def test_bpe_train_apply_hand_merges(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
     )
-    got = con.execute(Q.REGISTRY["bpe_train_apply"].oracle).fetchall()
+    got = con.execute(REGISTRY["bpe_train_apply"].oracle).fetchall()
     assert got == [("s", 4, 4, 1000, exp_merges)]
 
 
@@ -125,7 +124,7 @@ def test_stream_replay_change_detect_hand_trace(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         (r.user_id, r.batch_h.hour): (r.prev_e4, r.curr_e4, r.jump_e4)
-        for r in Q.REGISTRY["stream_replay_change_detect"].runner(
+        for r in REGISTRY["stream_replay_change_detect"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -154,7 +153,7 @@ def test_stream_replay_cusum_hand_trace(spark, tmp_path):
             r.cusum_pos_e4,
             r.cusum_neg_e4,
         )
-        for r in Q.REGISTRY["stream_replay_cusum"].runner(
+        for r in REGISTRY["stream_replay_cusum"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -208,7 +207,7 @@ def test_mann_kendall_hand_series(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: (r.n_days, r.s_stat, r.var18, r.z_e6)
-        for r in Q.REGISTRY["mann_kendall_trend"].runner(
+        for r in REGISTRY["mann_kendall_trend"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -242,7 +241,7 @@ def test_cochran_armitage_hand_doses(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: (r.n, r.a, r.t_w, r.num, r.z_e6)
-        for r in Q.REGISTRY["cochran_armitage_trend"].runner(
+        for r in REGISTRY["cochran_armitage_trend"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -272,7 +271,7 @@ def test_js_divergence_hand_corpus(spark, tmp_path):
     )
     got = {
         r.source: (r.n_tokens, r.jsd_e6)
-        for r in Q.REGISTRY["js_divergence_sources"].runner(
+        for r in REGISTRY["js_divergence_sources"].runner(
             spark, str(tmp_path)
         ).collect()
     }

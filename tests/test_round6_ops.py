@@ -10,12 +10,9 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from storm_data_etl_spark.plans import queries as Q
-from storm_data_etl_spark.plans import corpus_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import lake_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import ml_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import sft_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import window_queries  # noqa: F401 (registry)
+from storm_data_etl_spark.plans import load_all
+
+REGISTRY = load_all()
 
 
 def _write_events(spark, path, rows):
@@ -43,7 +40,7 @@ def test_semdedup_chain_prunes_all_but_first(spark, tmp_path):
         (3, [0.0, 0.0, 1.0, 0.0], 0),   # orthogonal -> kept
     ]
     _write_embeddings(spark, tmp_path, rows)
-    got = Q.REGISTRY["semdedup_prune"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["semdedup_prune"].runner(spark, str(tmp_path)).collect()
     from storm_data_etl_spark.session import release_pinned
 
     release_pinned()
@@ -62,7 +59,7 @@ def test_conformal_k_formula_and_coverage(spark, tmp_path):
         rows.append((eid, dt.datetime(2024, 1, 1), 1, "click", i / 100.0, "{}"))
         eid += 1
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["conformal_threshold"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["conformal_threshold"].runner(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
     assert r.k == min((9 * r.n_cal + 18) // 10, r.n_cal)
@@ -84,7 +81,7 @@ def test_pass_at_k_closed_form(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.k: r
-        for r in Q.REGISTRY["pass_at_k_estimates"].runner(
+        for r in REGISTRY["pass_at_k_estimates"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -104,7 +101,7 @@ def test_kruskal_and_anova_match_textbook(spark, tmp_path):
             eid += 1
     _write_events(spark, tmp_path, rows)
 
-    kw = Q.REGISTRY["kruskal_wallis_h"].runner(spark, str(tmp_path)).collect()[0]
+    kw = REGISTRY["kruskal_wallis_h"].runner(spark, str(tmp_path)).collect()[0]
     # textbook H on the quantized grid
     xs = sorted((int(v * 100), g) for g, vs in data.items() for v in vs)
     ranks = {}
@@ -128,7 +125,7 @@ def test_kruskal_and_anova_match_textbook(spark, tmp_path):
     H = 12 / (N * (N + 1)) * sum(R[g] ** 2 / n[g] for g in R) - 3 * (N + 1)
     assert abs(kw.h_e6 - int(H * 1e6)) <= 2  # floor-vs-float slack
 
-    an = Q.REGISTRY["anova_oneway_f"].runner(spark, str(tmp_path)).collect()[0]
+    an = REGISTRY["anova_oneway_f"].runner(spark, str(tmp_path)).collect()[0]
     g = {k: [int(v * 100) for v in vs] for k, vs in data.items()}
     gm = sum(sum(v) for v in g.values()) / N
     ssb = sum(len(v) * (sum(v) / len(v) - gm) ** 2 for v in g.values())
@@ -146,7 +143,7 @@ def test_time_travel_version_deltas(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
     got = {
         r.as_of: r
-        for r in Q.REGISTRY["time_travel_read"].runner(
+        for r in REGISTRY["time_travel_read"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -169,7 +166,7 @@ def test_deletion_vector_counts(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
     got = {
         r.file_id: r
-        for r in Q.REGISTRY["deletion_vector_read_stats"].runner(
+        for r in REGISTRY["deletion_vector_read_stats"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -191,7 +188,7 @@ def test_ips_closed_form(spark, tmp_path):
         (4, dt.datetime(2024, 1, 1), 0, "click", 200.0, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["ips_policy_value"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["ips_policy_value"].runner(spark, str(tmp_path)).collect()[0]
     assert r.n_logged == 4 and r.n_matched == 3
     per_row = (1000000 * 10000 * 4) // 3
     assert r.ips_value_e6 == (3 * per_row) // 4
@@ -209,7 +206,7 @@ def test_kneser_ney_tiny_corpus(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         (r.w1, r.w2): r
-        for r in Q.REGISTRY["kneser_ney_bigram_score"].runner(
+        for r in REGISTRY["kneser_ney_bigram_score"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -225,7 +222,7 @@ def test_poisson_bootstrap_weights_and_determinism(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     run = lambda: sorted(  # noqa: E731
         (r.rep, r.n_eff, r.rep_mean_e6, r.boot_lo_e6, r.boot_hi_e6)
-        for r in Q.REGISTRY["poisson_bootstrap_means"].runner(
+        for r in REGISTRY["poisson_bootstrap_means"].runner(
             spark, str(tmp_path)
         ).collect()
     )
@@ -279,7 +276,7 @@ def test_moe_router_python_replica(spark, tmp_path):
 
     got = {
         r.expert: r
-        for r in Q.REGISTRY["moe_router_load_balance"].runner(
+        for r in REGISTRY["moe_router_load_balance"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -295,7 +292,7 @@ def test_vocab_growth_hapax_accounting(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         r.source: r
-        for r in Q.REGISTRY["vocab_growth_stats"].runner(
+        for r in REGISTRY["vocab_growth_stats"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -329,7 +326,7 @@ def test_suffix_array_and_longest_repeat(spark, tmp_path):
     )
     assert got == [(d, i) for _, d, i in ref]
 
-    row = Q.REGISTRY["suffix_longest_repeat"].runner(spark, str(tmp_path)).collect()[0]
+    row = REGISTRY["suffix_longest_repeat"].runner(spark, str(tmp_path)).collect()[0]
     # longest repeat: "anana" (banana pos 2 vs ananas pos 1), length 5
     assert row.max_lcp == 5
     assert row.repeat_text == "anana"
@@ -343,7 +340,7 @@ def test_suffix_longest_repeat_cross_doc_exact_copy(spark, tmp_path):
     spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    row = Q.REGISTRY["suffix_longest_repeat"].runner(spark, str(tmp_path)).collect()[0]
+    row = REGISTRY["suffix_longest_repeat"].runner(spark, str(tmp_path)).collect()[0]
     assert row.max_lcp == 11
     assert row.repeat_text == "hello world"
 
@@ -357,7 +354,7 @@ def test_suffix_longest_repeat_degenerate_single_suffix(spark, tmp_path):
     spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    rows = Q.REGISTRY["suffix_longest_repeat"].runner(spark, str(tmp_path)).collect()
+    rows = REGISTRY["suffix_longest_repeat"].runner(spark, str(tmp_path)).collect()
     assert len(rows) == 1
     row = rows[0]
     assert row.n_suffixes == 1

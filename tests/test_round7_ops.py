@@ -8,9 +8,10 @@ empty-rebuild edge.
 
 from pyspark.sql import functions as F
 
-from storm_data_etl_spark.plans import ml_queries as Q  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import queries as REG
+from storm_data_etl_spark.plans import load_all
 from storm_data_etl_spark.operators.suffix import exact_substr_cut
+
+REGISTRY = load_all()
 
 
 def _docs(spark, rows):
@@ -147,7 +148,7 @@ def test_exact_substr_registry_runner(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     out = {
         r.doc_id: r
-        for r in REG.REGISTRY["exact_substr_dedup"].runner(
+        for r in REGISTRY["exact_substr_dedup"].runner(
             spark, str(tmp_path)
         ).collect()
     }

@@ -9,10 +9,9 @@ re-running the engine code.
 
 import math
 
-from storm_data_etl_spark.plans import sft_queries as Q  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import retrieval_queries as RQ  # noqa: F401
-from storm_data_etl_spark.plans import corpus_queries as CQ  # noqa: F401
-from storm_data_etl_spark.plans import queries as REG
+from storm_data_etl_spark.plans import load_all
+
+REGISTRY = load_all()
 
 #: quality 1.0 → rq=2; n=220 ∈ [200,20000], p=0 → rh=2; 45 tokens,
 #: 10/45 stopwords → rt=2. Labels (2,2,2).
@@ -51,7 +50,7 @@ def test_fleiss_kappa_hand_computed(spark, tmp_path):
             (3, T_MIX, "en", "s1", len(T_MIX)),
         ],
     )
-    rows = REG.REGISTRY["fleiss_kappa_agreement"].runner(spark, sf).collect()
+    rows = REGISTRY["fleiss_kappa_agreement"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.source, r.n, r.pairs) == ("s1", 3, 7)
@@ -65,7 +64,7 @@ def test_fleiss_kappa_degenerate_null(spark, tmp_path):
         tmp_path,
         [(i, T_LOW, "en", "s2", len(T_LOW)) for i in (1, 2, 3)],
     )
-    rows = REG.REGISTRY["fleiss_kappa_agreement"].runner(spark, sf).collect()
+    rows = REGISTRY["fleiss_kappa_agreement"].runner(spark, sf).collect()
     assert len(rows) == 1
     assert rows[0].pairs == 9 and rows[0].kappa_e6 is None
 
@@ -102,7 +101,7 @@ def test_elo_sequential_hand_folded(spark, tmp_path):
     )
     got = {
         r.source: r
-        for r in REG.REGISTRY["elo_sequential_ratings"].runner(spark, sf).collect()
+        for r in REGISTRY["elo_sequential_ratings"].runner(spark, sf).collect()
     }
     assert set(got) == {"s1", "s2"}
     assert (got["s1"].n_matches, got["s1"].n_wins) == (3, 2)
@@ -242,7 +241,7 @@ def test_kendall_tau_b_hand_computed(spark, tmp_path):
             (3, T_MIX, "en", "s1", len(T_MIX)),
         ],
     )
-    rows = REG.REGISTRY["kendall_tau_b_raters"].runner(spark, sf).collect()
+    rows = REGISTRY["kendall_tau_b_raters"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n, r.cd2, r.dx, r.dy) == (3, 4, 4, 6)
@@ -266,7 +265,7 @@ def test_rbo_reversed_rankers(spark, tmp_path):
             (2, T_LONG_JUNK, "en", "s1", len(T_LONG_JUNK)),
         ],
     )
-    rows = REG.REGISTRY["rbo_rankers_overlap"].runner(spark, sf).collect()
+    rows = REGISTRY["rbo_rankers_overlap"].runner(spark, sf).collect()
     assert len(rows) == 1
     assert (rows[0].n_overlap, rows[0].rbo_min_e6) == (2, 270832)
 
@@ -284,7 +283,7 @@ def test_rbo_identical_rankers(spark, tmp_path):
             (3, T_LOW, "en", "s1", len(T_LOW)),
         ],
     )
-    rows = REG.REGISTRY["rbo_rankers_overlap"].runner(spark, sf).collect()
+    rows = REGISTRY["rbo_rankers_overlap"].runner(spark, sf).collect()
     assert len(rows) == 1
     assert (rows[0].n_overlap, rows[0].rbo_min_e6) == (3, 461249)
 
@@ -293,7 +292,7 @@ def test_chao1_hand_computed(spark, tmp_path):
     """One doc 'a a b c': V=3, f₁=2, f₂=1, N=4 →
     chao1·100 = 300 + (100·2·1)//(2·2) = 350; P₀·1e6 = 2e6//4 = 500000."""
     sf = _write_docs(spark, tmp_path, [(1, "a a b c", "en", "s1", 7)])
-    rows = REG.REGISTRY["chao1_vocab_richness"].runner(spark, sf).collect()
+    rows = REGISTRY["chao1_vocab_richness"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n_tokens, r.vocab_size, r.h1, r.h2) == (4, 3, 2, 1)
@@ -304,7 +303,7 @@ def test_chao1_no_dis_legomena_defined(spark, tmp_path):
     """f₂ = 0 must stay finite (bias-corrected form): 'a b' → V=2, f₁=2,
     f₂=0 → chao1·100 = 200 + (100·2·1)//2 = 300."""
     sf = _write_docs(spark, tmp_path, [(1, "a b", "en", "s1", 3)])
-    r = REG.REGISTRY["chao1_vocab_richness"].runner(spark, sf).collect()[0]
+    r = REGISTRY["chao1_vocab_richness"].runner(spark, sf).collect()[0]
     assert r.chao1_x100 == 300
 
 
@@ -328,7 +327,7 @@ def test_ndcg_hand_computed(spark, tmp_path):
             (4, T_LOW, "en", "s1", len(T_LOW)),
         ],
     )
-    rows = REG.REGISTRY["ndcg_at_10_length_ranker"].runner(spark, sf).collect()
+    rows = REGISTRY["ndcg_at_10_length_ranker"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n_ret, r.g2, r.g1) == (4, 2, 1)
@@ -343,7 +342,7 @@ def test_ndcg_all_zero_gain_null(spark, tmp_path):
     sf = _write_docs(
         spark, tmp_path, [(i, T_LOW, "en", "s1", len(T_LOW)) for i in (1, 2)]
     )
-    rows = REG.REGISTRY["ndcg_at_10_length_ranker"].runner(spark, sf).collect()
+    rows = REGISTRY["ndcg_at_10_length_ranker"].runner(spark, sf).collect()
     assert rows[0].ndcg_e6 is None
 
 
@@ -361,7 +360,7 @@ def test_ece_hand_computed(spark, tmp_path):
             (3, T_LOW, "de", "s1", len(T_LOW)),
         ],
     )
-    rows = REG.REGISTRY["ece_calibration_error"].runner(spark, sf).collect()
+    rows = REGISTRY["ece_calibration_error"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n_docs, r.n_bins, r.t_abs) == (3, 3, 4750)
@@ -380,7 +379,7 @@ def test_tv_token_drift_hand_computed(spark, tmp_path):
     )
     got = {
         r.source: r
-        for r in REG.REGISTRY["tv_token_drift"].runner(spark, sf).collect()
+        for r in REGISTRY["tv_token_drift"].runner(spark, sf).collect()
     }
     assert (got["s1"].n_tokens, got["s1"].tv_e6) == (3, 200000)
     assert (got["s2"].n_tokens, got["s2"].tv_e6) == (2, 300000)
@@ -400,7 +399,7 @@ def test_qwk_hand_computed(spark, tmp_path):
             (3, T_MIX, "en", "s1", len(T_MIX)),
         ],
     )
-    rows = REG.REGISTRY["quadratic_weighted_kappa"].runner(spark, sf).collect()
+    rows = REGISTRY["quadratic_weighted_kappa"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n, r.wo, r.we_n) == (3, 1, 15)
@@ -435,7 +434,7 @@ def test_gopher_gate_hand_computed(spark, tmp_path):
     )
     got = {
         r.source: r
-        for r in REG.REGISTRY["gopher_quality_gate"].runner(spark, sf).collect()
+        for r in REGISTRY["gopher_quality_gate"].runner(spark, sf).collect()
     }
     p = got["sP"]
     assert p.n_pass_all == 1 and sum(
@@ -488,7 +487,7 @@ def test_krippendorff_interval_hand_computed(spark, tmp_path):
             (3, T_MIX, "en", "s1", len(T_MIX)),
         ],
     )
-    rows = REG.REGISTRY["krippendorff_alpha_interval"].runner(spark, sf).collect()
+    rows = REGISTRY["krippendorff_alpha_interval"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.source, r.n, r.sd) == ("s1", 3, 1)
@@ -512,7 +511,7 @@ def test_krippendorff_interval_negative_and_null(spark, tmp_path):
     )
     rows = {
         r.source: r
-        for r in REG.REGISTRY["krippendorff_alpha_interval"].runner(spark, sf).collect()
+        for r in REGISTRY["krippendorff_alpha_interval"].runner(spark, sf).collect()
     }
     assert rows["s1"].sd == 2 and rows["s1"].alpha_e6 == -500000
     assert rows["s2"].sd == 0 and rows["s2"].alpha_e6 is None
@@ -542,7 +541,7 @@ def test_mrr_at_10_hand_computed(spark, tmp_path):
     """Query 1 first relevant at rank 1 (2520/1), query 2 no hit (0) →
     MRR·1e6 = 1e6·2520 tdiv (2520·2) = 500000."""
     sf = _ir_fixture(spark, tmp_path)
-    rows = REG.REGISTRY["mrr_at_10_ranker"].runner(spark, sf).collect()
+    rows = REGISTRY["mrr_at_10_ranker"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.source, r.n_queries, r.n_hit) == ("s1", 2, 1)
@@ -555,7 +554,7 @@ def test_map_at_10_hand_computed(spark, tmp_path):
     R=0 (excluded) → MAP·1e6 = 1e6·5292000 tdiv (6350400·1) = 833333
     (= floor(5/6 · 1e6))."""
     sf = _ir_fixture(spark, tmp_path)
-    rows = REG.REGISTRY["map_at_10_ranker"].runner(spark, sf).collect()
+    rows = REGISTRY["map_at_10_ranker"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.source, r.n_queries, r.n_eval) == ("s1", 2, 1)
@@ -576,7 +575,7 @@ def test_simpson_diversity_hand_computed(spark, tmp_path):
     )
     rows = {
         r.source: r
-        for r in REG.REGISTRY["simpson_diversity_index"].runner(spark, sf).collect()
+        for r in REGISTRY["simpson_diversity_index"].runner(spark, sf).collect()
     }
     r1 = rows["s1"]
     assert (r1.n_tokens, r1.vocab_size) == (3, 2)
@@ -602,7 +601,7 @@ def test_gini_concentration_hand_computed(spark, tmp_path):
     )
     rows = {
         r.source: r
-        for r in REG.REGISTRY["gini_token_concentration"].runner(spark, sf).collect()
+        for r in REGISTRY["gini_token_concentration"].runner(spark, sf).collect()
     }
     assert rows["s1"].gini_e6 == 250000
     assert rows["s2"].gini_e6 == 0
@@ -613,9 +612,6 @@ def test_gini_concentration_hand_computed(spark, tmp_path):
 # =====================================================================
 
 import datetime as _dt
-
-from storm_data_etl_spark.plans import window_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import ml_queries  # noqa: F401 (registry)
 
 
 def _write_events(spark, path, rows):
@@ -647,7 +643,7 @@ def test_cusum_hand_computed_and_order_dependent(spark, tmp_path):
     )
     rows = {
         r.event_type: r
-        for r in REG.REGISTRY["cusum_drift_scores"].runner(spark, str(tmp_path)).collect()
+        for r in REGISTRY["cusum_drift_scores"].runner(spark, str(tmp_path)).collect()
     }
     rt, ru = rows["t"], rows["u"]
     assert (rt.n_events, rt.k_e4) == (3, 20000)
@@ -672,7 +668,7 @@ def test_edit_distance_hand_computed(spark, tmp_path):
             (100, "lonely doc", "en", "s1", 10),
         ],
     )
-    rows = REG.REGISTRY["edit_distance_near_dup"].runner(spark, sf).collect()
+    rows = REGISTRY["edit_distance_near_dup"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.source, r.n_pairs, r.n_exact, r.n_near, r.sum_dist) == (
@@ -703,7 +699,7 @@ def test_mcc_hand_computed(spark, tmp_path):
     )
     rows = {
         r.source: r
-        for r in REG.REGISTRY["mcc_binary_quality"].runner(spark, sf).collect()
+        for r in REGISTRY["mcc_binary_quality"].runner(spark, sf).collect()
     }
     r1 = rows["s1"]
     assert (r1.tp, r1.fp, r1.fn, r1.tn) == (2, 1, 1, 1)
@@ -726,7 +722,7 @@ def test_langid_margin_hand_computed(spark, tmp_path):
             (3, "de la", "es", "s1", 5),
         ],
     )
-    rows = REG.REGISTRY["langid_confidence_margin"].runner(spark, sf).collect()
+    rows = REGISTRY["langid_confidence_margin"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n_docs, r.n_und, r.n_tied, r.n_margin_ge3, r.sum_margin) == (
@@ -750,7 +746,7 @@ def test_cusum_nan_values_excluded(spark, tmp_path):
             (4, ts, 10, "t", float("nan"), "{}"),
         ],
     )
-    rows = REG.REGISTRY["cusum_drift_scores"].runner(spark, str(tmp_path)).collect()
+    rows = REGISTRY["cusum_drift_scores"].runner(spark, str(tmp_path)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n_events, r.k_e4, r.cusum_pos_e4, r.cusum_neg_e4) == (
@@ -770,7 +766,7 @@ def test_edit_distance_empty_pair_near_superset(spark, tmp_path):
             (38, "???", "en", "s1", 3),
         ],
     )
-    rows = REG.REGISTRY["edit_distance_near_dup"].runner(spark, sf).collect()
+    rows = REGISTRY["edit_distance_near_dup"].runner(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n_pairs, r.n_exact, r.n_near, r.sum_dist) == (1, 1, 1, 0)
@@ -799,7 +795,7 @@ def test_benford_hand_computed(spark, tmp_path):
             (7, ts, 10, "t", None, "{}"),
         ],
     )
-    rows = REG.REGISTRY["benford_chi2_by_type"].runner(spark, str(tmp_path)).collect()
+    rows = REGISTRY["benford_chi2_by_type"].runner(spark, str(tmp_path)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.n_pos, r.c1, r.c9) == (3, 2, 0)
@@ -834,7 +830,7 @@ def test_runs_test_hand_computed(spark, tmp_path):
     )
     rows = {
         r.event_type: r
-        for r in REG.REGISTRY["runs_test_randomness"].runner(spark, str(tmp_path)).collect()
+        for r in REGISTRY["runs_test_randomness"].runner(spark, str(tmp_path)).collect()
     }
     rt = rows["t"]
     assert (rt.n, rt.n1, rt.n0, rt.r) == (4, 2, 2, 4)
@@ -868,7 +864,7 @@ def test_cochran_q_hand_computed(spark, tmp_path):
     )
     rows = {
         r.source: r
-        for r in REG.REGISTRY["cochran_q_test"].runner(spark, sf).collect()
+        for r in REGISTRY["cochran_q_test"].runner(spark, sf).collect()
     }
     r1 = rows["s1"]
     assert (r1.n, r1.c1, r1.c2, r1.c3) == (5, 3, 3, 2)
@@ -896,7 +892,7 @@ def test_cronbach_alpha_hand_computed(spark, tmp_path):
     )
     rows = {
         r.source: r
-        for r in REG.REGISTRY["cronbach_alpha_raters"].runner(spark, sf).collect()
+        for r in REGISTRY["cronbach_alpha_raters"].runner(spark, sf).collect()
     }
     r1 = rows["s1"]
     assert (r1.n, r1.sv, r1.st) == (3, 20, 56)

@@ -11,8 +11,9 @@ below is computed by hand in the comments, not by running engine code.
 from __future__ import annotations
 
 from storm_data_etl_spark.plans import retrieval_queries as RQ
-from storm_data_etl_spark.plans import window_queries as WQ  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import queries as REG
+from storm_data_etl_spark.plans import load_all
+
+REGISTRY = load_all()
 
 #: See tests/test_round8_ops.py for the band math of these texts.
 T_HIGH = "the quick brown fox jumps over the lazy dog " * 5
@@ -98,7 +99,7 @@ def test_quality_model_train_hand_computed(spark, tmp_path):
     )
     out = {
         r.feature: r
-        for r in REG.REGISTRY["quality_model_train"].runner(spark, sf).collect()
+        for r in REGISTRY["quality_model_train"].runner(spark, sf).collect()
     }
     assert set(out) == set(RQ._QMT_FEATURES)
     rows = [HAND_FEATURES[t] for t in texts]
@@ -117,7 +118,7 @@ def test_quality_model_train_empty_input(spark, tmp_path):
     """Empty corpus: weights stay at the zero init (greatest(n,1) guard),
     counts all zero — 5 deterministic rows, no division-by-zero error."""
     sf = _write_docs(spark, tmp_path, [])
-    rows = REG.REGISTRY["quality_model_train"].runner(spark, sf).collect()
+    rows = REGISTRY["quality_model_train"].runner(spark, sf).collect()
     assert len(rows) == 5
     for r in rows:
         assert (r.weight_e6, r.n_train, r.n_pos, r.n_correct) == (0, 0, 0, 0)
@@ -141,7 +142,7 @@ def test_trained_coefficients_feed_scorer(spark, tmp_path):
     )
     out = {
         r.feature: r.weight_e6
-        for r in REG.REGISTRY["quality_model_train"].runner(spark, sf).collect()
+        for r in REGISTRY["quality_model_train"].runner(spark, sf).collect()
     }
     w = [out[f] for f in RQ._QMT_FEATURES]
 
@@ -190,7 +191,7 @@ def test_trained_coefficients_feed_scorer(spark, tmp_path):
         "     >= 500000 THEN 1 ELSE 0 END AS keep",
     )
     n_correct = pred.filter("keep = CAST(y AS INT)").count()
-    q_row = REG.REGISTRY["quality_model_train"].runner(spark, sf).collect()[0]
+    q_row = REGISTRY["quality_model_train"].runner(spark, sf).collect()[0]
     assert q_row.n_correct == n_correct
 
 
@@ -233,7 +234,7 @@ def test_stream_replay_trace_hand_computed(spark, tmp_path):
     sf = _write_events(spark, tmp_path, rows)
     got = {
         (r.user_id, str(r.batch_h)): (r.n, r.total_e4, r.vmin_e4, r.vmax_e4, r.ewma_e4)
-        for r in REG.REGISTRY["stream_replay_running_stats"].runner(spark, sf).collect()
+        for r in REGISTRY["stream_replay_running_stats"].runner(spark, sf).collect()
     }
     # user 1 @10:00: fold 4.0, 2.0 -> n=2 total=6 min=2 max=4
     #   ewma: 4.0 then 0.2*2 + 0.8*4 = 3.6
@@ -309,7 +310,7 @@ def test_stream_replay_matches_live_stream(spark, tmp_path):
         if r.user_id not in final_live or r.n > final_live[r.user_id].n:
             final_live[r.user_id] = r
 
-    cert = REG.REGISTRY["stream_replay_running_stats"].runner(spark, sf).collect()
+    cert = REGISTRY["stream_replay_running_stats"].runner(spark, sf).collect()
     final_cert = {}
     for r in cert:
         if r.user_id not in final_cert or r.n > final_cert[r.user_id].n:
@@ -370,7 +371,7 @@ def test_quality_model_auc_hand_computed(spark, tmp_path):
         scores.append(sum(wj * xj for wj, xj in zip(w, xs)))
         ys.append(y)
     n1, n0, auc = _auc_reference(scores, ys)
-    got = REG.REGISTRY["quality_model_auc"].runner(spark, sf).collect()
+    got = REGISTRY["quality_model_auc"].runner(spark, sf).collect()
     assert len(got) == 1
     r = got[0]
     assert (r.n_pos, r.n_neg, r.auc_e6) == (n1, n0, auc)
@@ -385,5 +386,5 @@ def test_quality_model_auc_single_class_null(spark, tmp_path):
     sf = _write_docs(
         spark, tmp_path, [(i, T_HIGH, "en", "s1", len(T_HIGH)) for i in (1, 2, 3)]
     )
-    r = REG.REGISTRY["quality_model_auc"].runner(spark, sf).collect()[0]
+    r = REGISTRY["quality_model_auc"].runner(spark, sf).collect()[0]
     assert (r.n_pos, r.n_neg, r.auc_e6) == (3, 0, None)

@@ -10,12 +10,9 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from storm_data_etl_spark.plans import corpus_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import lake_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import queries as Q
-from storm_data_etl_spark.plans import retrieval_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import sft_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import window_queries  # noqa: F401 (registry)
+from storm_data_etl_spark.plans import load_all
+
+REGISTRY = load_all()
 
 
 def _write_events(spark, path, rows):
@@ -42,7 +39,7 @@ def test_jarque_bera_hand_moments(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: r
-        for r in Q.REGISTRY["jarque_bera_normality"].runner(
+        for r in REGISTRY["jarque_bera_normality"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -77,7 +74,7 @@ def test_effect_size_panel_hand_ranks(spark, tmp_path):
         (6, ts, 1, "click", None, "{}"),  # null value excluded
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["effect_size_panel"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["effect_size_panel"].runner(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
     assert (r.n1, r.n2) == (3, 2)
@@ -105,7 +102,7 @@ def test_t_closeness_hand_emd(spark, tmp_path):
         (3, dt.datetime(2024, 1, 1, 1), 1, "b", 4.0, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["t_closeness_audit"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["t_closeness_audit"].runner(spark, str(tmp_path)).collect()
     from storm_data_etl_spark.session import release_pinned
 
     release_pinned()
@@ -125,7 +122,7 @@ def test_t_closeness_identical_distribution_is_zero(spark, tmp_path):
         (3, dt.datetime(2024, 1, 1, 1), 1, "b", 4.0, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["t_closeness_audit"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["t_closeness_audit"].runner(spark, str(tmp_path)).collect()
     from storm_data_etl_spark.session import release_pinned
 
     release_pinned()
@@ -161,7 +158,7 @@ def test_link_prediction_hand_graph(spark, tmp_path):
     spark.createDataFrame(
         orders, "l_orderkey long, l_partkey long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
-    got = Q.REGISTRY["link_prediction_scores"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["link_prediction_scores"].runner(spark, str(tmp_path)).collect()
     from storm_data_etl_spark.session import release_pinned
 
     release_pinned()
@@ -186,7 +183,7 @@ def test_flesch_hand_counts(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r.lang: r
-        for r in Q.REGISTRY["flesch_readability_by_lang"].runner(
+        for r in REGISTRY["flesch_readability_by_lang"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -226,7 +223,7 @@ def test_query_likelihood_hand_smoothing(spark, tmp_path):
         (3, "nothing here extra", "en", "s", 18),
     ]
     _write_docs(spark, tmp_path, rows)
-    got = Q.REGISTRY["query_likelihood_dirichlet"].runner(
+    got = REGISTRY["query_likelihood_dirichlet"].runner(
         spark, str(tmp_path)
     ).collect()
     assert len(got) == 3
@@ -267,7 +264,7 @@ def test_stream_replay_sessionize_hand_trace(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         (r.user_id, r.batch_h.hour): (r.n_sessions, r.n_events, r.last_ts)
-        for r in Q.REGISTRY["stream_replay_sessionize"].runner(
+        for r in REGISTRY["stream_replay_sessionize"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -318,7 +315,7 @@ def test_forecast_mase_hand_series(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: r
-        for r in Q.REGISTRY["forecast_mase_backtest"].runner(
+        for r in REGISTRY["forecast_mase_backtest"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -346,7 +343,7 @@ def test_best_of_n_hand_order_stats(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r.n: r
-        for r in Q.REGISTRY["best_of_n_reward_curve"].runner(
+        for r in REGISTRY["best_of_n_reward_curve"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -373,7 +370,7 @@ def test_xcorr_hand_series(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.k: r
-        for r in Q.REGISTRY["xcorr_lead_lag"].runner(spark, str(tmp_path)).collect()
+        for r in REGISTRY["xcorr_lead_lag"].runner(spark, str(tmp_path)).collect()
     }
     from storm_data_etl_spark.session import release_pinned
 
@@ -406,7 +403,7 @@ def test_cuped_removes_preperiod_imbalance(spark, tmp_path):
         rows.append((u, dt.datetime(2024, 1, 10), u, "click", float(u), "{}"))
         rows.append((10 + u, dt.datetime(2024, 1, 20), u, "click", 2.0 * u, "{}"))
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["cuped_adjusted_lift"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["cuped_adjusted_lift"].runner(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
     assert (r.n, r.n1) == (4, 2)
@@ -426,7 +423,7 @@ def test_cuped_missing_period_users_coalesce_to_zero(spark, tmp_path):
         (2, dt.datetime(2024, 1, 20), 2, "click", 2.0, "{}"),   # ctrl, post only
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["cuped_adjusted_lift"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["cuped_adjusted_lift"].runner(spark, str(tmp_path)).collect()
     r = got[0]
     assert (r.n, r.n1) == (2, 1)
     assert r.theta_e6 == -2_000_000
@@ -461,7 +458,7 @@ def test_km_survival_hand_curve(spark, tmp_path):
     got = [
         (r.t_min, r.n_risk, r.d, r.surv_e6)
         for r in sorted(
-            Q.REGISTRY["km_survival_curve"].runner(spark, str(tmp_path)).collect(),
+            REGISTRY["km_survival_curve"].runner(spark, str(tmp_path)).collect(),
             key=lambda r: r.t_min,
         )
     ]
@@ -526,7 +523,7 @@ def test_sessionize_replay_matches_live_stream(spark, tmp_path):
         if r.user_id not in final_live or r.n_events > final_live[r.user_id].n_events:
             final_live[r.user_id] = r
 
-    cert = Q.REGISTRY["stream_replay_sessionize"].runner(spark, str(tmp_path)).collect()
+    cert = REGISTRY["stream_replay_sessionize"].runner(spark, str(tmp_path)).collect()
     final_cert = {}
     for r in cert:
         if r.user_id not in final_cert or r.n_events > final_cert[r.user_id].n_events:
@@ -555,7 +552,7 @@ def test_brown_forsythe_hand_medians(spark, tmp_path):
         (10 + i, ts, 1, "b", float(v), "{}") for i, v in enumerate([1, 1, 5, 5])
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["levene_brown_forsythe"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["levene_brown_forsythe"].runner(spark, str(tmp_path)).collect()
     from storm_data_etl_spark.session import release_pinned
 
     release_pinned()
@@ -587,7 +584,7 @@ def test_log_rank_hand_steps(spark, tmp_path):
         (7, d(2024, 1, 1, 8, 5), 4, "a", 1.0, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["log_rank_test"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["log_rank_test"].runner(spark, str(tmp_path)).collect()
     from storm_data_etl_spark.session import release_pinned
 
     release_pinned()
@@ -622,7 +619,7 @@ def test_did_hand_panel(spark, tmp_path):
         (3, post, 2, "a", 4.0, "{}"),   # ctrl post
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["diff_in_differences"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["diff_in_differences"].runner(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
     assert (r.n, r.treat_delta_e4, r.control_delta_e4, r.did_e4) == (

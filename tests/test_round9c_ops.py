@@ -11,12 +11,9 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from storm_data_etl_spark.plans import corpus_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import lake_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import ml_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import queries as Q
-from storm_data_etl_spark.plans import sft_queries  # noqa: F401 (registry)
-from storm_data_etl_spark.plans import window_queries  # noqa: F401 (registry)
+from storm_data_etl_spark.plans import load_all
+
+REGISTRY = load_all()
 
 TS = dt.datetime(2024, 1, 1, 12)
 
@@ -54,7 +51,7 @@ def test_mcnemar_hand_cells(spark, tmp_path):
         (6, TS, None, "click", 1.0, "{}"),  # null user excluded
     ]
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["mcnemar_test"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["mcnemar_test"].runner(spark, str(tmp_path)).collect()[0]
     assert (r.n_pairs, r.n11, r.n10, r.n01, r.n00) == (5, 1, 2, 1, 1)
     assert r.chi2_e6 == _tdiv(1000000 * 1 * 1, 3) == 333333
     assert r.chi2_cc_e6 == 0
@@ -68,7 +65,7 @@ def test_mcnemar_no_discordance_is_null(spark, tmp_path):
         (2, TS, 2, "view", 1.0, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["mcnemar_test"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["mcnemar_test"].runner(spark, str(tmp_path)).collect()[0]
     assert (r.n10, r.n01) == (0, 0)
     assert r.chi2_e6 is None and r.chi2_cc_e6 is None
 
@@ -96,7 +93,7 @@ def test_mantel_haenszel_hand_strata(spark, tmp_path):
         (12, TS, 2, "a", None, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["mantel_haenszel_or"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["mantel_haenszel_or"].runner(spark, str(tmp_path)).collect()[0]
     assert (r.n_strata, r.n_rows) == (2, 10)
     assert r.r_e6 == 666666 + 250000
     assert r.s_e6 == 166666 + 250000
@@ -121,7 +118,7 @@ def test_brier_decomposition_hand_bins(spark, tmp_path):
         (6, TS, 1, "view", None, "{}"),  # null value excluded
     ]
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["brier_decomposition"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["brier_decomposition"].runner(spark, str(tmp_path)).collect()[0]
     assert r.n == 6
     assert r.brier_e6 == _tdiv(1000000 * 25050, 10000 * 6) == 417500
     rel_100 = math.floor(1e6 * 2 * (200 / (100.0 * 2) - 1 / 2.0) ** 2)
@@ -148,7 +145,7 @@ def test_grpo_advantages_hand_groups(spark, tmp_path):
         (5, TS, 3, "a", 5.0, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    got = Q.REGISTRY["grpo_group_advantages"].runner(spark, str(tmp_path)).collect()
+    got = REGISTRY["grpo_group_advantages"].runner(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
     mean = 600 / 3.0
@@ -175,7 +172,7 @@ def test_doremi_weights_hand_iteration(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r.source: r
-        for r in Q.REGISTRY["doremi_domain_weights"].runner(
+        for r in REGISTRY["doremi_domain_weights"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -216,7 +213,7 @@ def test_snips_dr_hand_rows(spark, tmp_path):
         (1, TS, 16, "click", 0.5, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["snips_dr_policy_value"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["snips_dr_policy_value"].runner(spark, str(tmp_path)).collect()[0]
     assert (r.n_logged, r.n_matched) == (2, 1)
     assert r.snips_value_e4 == 1000000
     assert r.dr_value_e4 == 1000000
@@ -235,7 +232,7 @@ def test_hits_hand_graph(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
     got = {
         (r.kind, r.node): r
-        for r in Q.REGISTRY["hits_hub_authority"].runner(spark, str(tmp_path)).collect()
+        for r in REGISTRY["hits_hub_authority"].runner(spark, str(tmp_path)).collect()
     }
     c1, c2 = 1000000 + 101, 1000000 + 102
     assert got[("authority", c1)].score == 5
@@ -271,7 +268,7 @@ def test_zipf_fit_hand_counts(spark, tmp_path):
         (1, "a a b", "en", "x", 5),
     ]
     _write_docs(spark, tmp_path, rows)
-    r = Q.REGISTRY["zipf_law_fit"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["zipf_law_fit"].runner(spark, str(tmp_path)).collect()[0]
     n, sx, sy, sxy, sxx, syy = _ols_mirror([(1, 6), (2, 3), (3, 1)])
     num = n * sxy - sx * sy
     den = float(n * sxx - sx * sx)
@@ -300,7 +297,7 @@ def test_heaps_fit_hand_docs(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r.source: r
-        for r in Q.REGISTRY["heaps_law_fit"].runner(spark, str(tmp_path)).collect()
+        for r in REGISTRY["heaps_law_fit"].runner(spark, str(tmp_path)).collect()
     }
     n, sx, sy, sxy, sxx, _ = _ols_mirror([(4, 4), (4, 2), (2, 2)])
     num = float(n) * sxy - float(sx) * sy
@@ -333,7 +330,7 @@ def test_shapley_attribution_hand_lattice(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.channel: r
-        for r in Q.REGISTRY["shapley_channel_attribution"].runner(
+        for r in REGISTRY["shapley_channel_attribution"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -358,7 +355,7 @@ def test_secret_entropy_hand_candidates(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r.source: r
-        for r in Q.REGISTRY["secret_entropy_audit"].runner(
+        for r in REGISTRY["secret_entropy_audit"].runner(
             spark, str(tmp_path)
         ).collect()
     }
@@ -497,7 +494,7 @@ def test_friedman_hand_blocks(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r.source: r
-        for r in Q.REGISTRY["friedman_test"].runner(spark, str(tmp_path)).collect()
+        for r in REGISTRY["friedman_test"].runner(spark, str(tmp_path)).collect()
     }
     r1 = got["s1"]
     assert (r1.n, r1.rs1, r1.rs2, r1.rs3) == (5, 23, 20, 17)
@@ -541,7 +538,7 @@ def test_pacf_hand_series(spark, tmp_path):
             rows.append((eid, dt.datetime(2024, 1, day, 12), 1, "t", 1.0, "{}"))
             eid += 1
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["pacf_durbin_levinson"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["pacf_durbin_levinson"].runner(spark, str(tmp_path)).collect()[0]
     base = dt.date(2024, 1, 1).toordinal() - dt.date(1970, 1, 1).toordinal()
     daily = [(base + i, c) for i, c in enumerate(counts)]
     rho = _pacf_mirror(daily)
@@ -566,5 +563,5 @@ def test_pacf_short_series_nulls(spark, tmp_path):
         (2, dt.datetime(2024, 1, 2, 13), 1, "t", 1.0, "{}"),
     ]
     _write_events(spark, tmp_path, rows)
-    r = Q.REGISTRY["pacf_durbin_levinson"].runner(spark, str(tmp_path)).collect()[0]
+    r = REGISTRY["pacf_durbin_levinson"].runner(spark, str(tmp_path)).collect()[0]
     assert r.pacf1_e4 is None and r.pacf2_e4 is None and r.pacf3_e4 is None

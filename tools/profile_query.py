@@ -19,15 +19,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from storm_data_etl_spark.session import get_spark, release_pinned
-from storm_data_etl_spark.plans import queries as _q
-from storm_data_etl_spark.plans import enrich_queries  # noqa: F401
-from storm_data_etl_spark.plans import ml_queries  # noqa: F401
-from storm_data_etl_spark.plans import window_queries  # noqa: F401
-from storm_data_etl_spark.plans import lake_queries  # noqa: F401
-from storm_data_etl_spark.plans import corpus_queries  # noqa: F401
-from storm_data_etl_spark.plans import geo_queries  # noqa: F401
-from storm_data_etl_spark.plans import retrieval_queries  # noqa: F401
-from storm_data_etl_spark.plans import sft_queries  # noqa: F401
+from storm_data_etl_spark.plans import load_all
+
+_REGISTRY = load_all()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -51,7 +45,7 @@ def main() -> None:
     t(spark, SF_DIR, "lineitem").agg(F.count(F.lit(1))).collect()
 
     for name in names:
-        df = _q.REGISTRY[name].runner(spark, SF_DIR)
+        df = _REGISTRY[name].runner(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
