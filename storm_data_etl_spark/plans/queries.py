@@ -366,7 +366,9 @@ def count_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_multiway",
     """
-    SELECT n.n_name, round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+    SELECT n.n_name,
+           CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
+                AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -380,7 +382,10 @@ def count_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5-style 6-table join: exercises Catalyst join reordering +
-    broadcast of the dim tables (region/nation/supplier)."""
+    broadcast of the dim tables (region/nation/supplier). Revenue is summed
+    as exact DECIMAL(18,4) per row (as in nation_pair_trade) and rounded to
+    cents before the one cast to DOUBLE, so the result does not depend on
+    the engine's summation order."""
     c = t(spark, sf_dir, "customer")
     o = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
@@ -396,8 +401,9 @@ def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
+    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
     return joined.groupBy("n_name").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
+        F.round(F.sum(rev), 2).cast("double").alias("revenue")
     )
 
 

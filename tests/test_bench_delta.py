@@ -176,3 +176,25 @@ def test_missing_canary_message_names_the_right_side(
     rc, out = _run(monkeypatch, capsys, [old, new])
     assert rc == 0
     assert phrase in out
+
+
+@pytest.mark.parametrize(
+    "key,old_val,new_val", [("cpus", 8, 32), ("sf", 0.1, 0.01)]
+)
+def test_mismatched_cpus_or_sf_refused(
+    tmp_path, monkeypatch, capsys, key, old_val, new_val
+):
+    """Timings at different core counts or scale factors are different
+    experiments; an otherwise clean comparison must still exit 1 and say
+    which field differs."""
+    paths = []
+    for name, val in (("old.json", old_val), ("new.json", new_val)):
+        p = tmp_path / name
+        p.write_text(json.dumps(
+            {"queries": {"q1": 1.0}, "canary": {"scale": 1.0}, "cpus": 8,
+             "sf": 0.1, key: val}
+        ))
+        paths.append(str(p))
+    rc, out = _run(monkeypatch, capsys, paths)
+    assert rc == 1
+    assert "REFUSED" in out and f"{key} differs" in out

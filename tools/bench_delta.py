@@ -33,7 +33,10 @@ failure, so it can never be waved through: the gate REFUSES (exit 1) when
   * the host factor new/old falls outside [1/HOST_FACTOR_MAX,
     HOST_FACTOR_MAX].
 
-`--allow-contended` downgrades both refusals to a loud warning (for
+The comparison is also refused outright when the two artifacts record a
+different `cpus` or `sf` (a field absent on either side is not compared).
+
+`--allow-contended` downgrades both canary refusals to a loud warning (for
 forensics on artifacts that cannot be re-run); per-query regressions still
 gate on the normalized ratio in that mode, stated in the output.
 """
@@ -138,6 +141,17 @@ def main() -> int:
     old_path, new_path = argv[0], argv[1]
     threshold = float(argv[2]) if len(argv) > 2 else 2.0
     old_data, new_data = _load(old_path), _load(new_path)
+    # Timings from different core counts or scale factors are different
+    # experiments: no canary normalizes across them.
+    mismatched = [
+        f"{key} differs: old {old_data[key]}, new {new_data[key]}"
+        for key in ("cpus", "sf")
+        if key in old_data and key in new_data and old_data[key] != new_data[key]
+    ]
+    if mismatched:
+        for msg in mismatched:
+            print(f"REFUSED: {msg} — re-run both sides with the same cpus and sf")
+        return 1
     old, new = old_data.get("queries", {}), new_data.get("queries", {})
 
     old_scale, new_scale = _canary_scale(old_data), _canary_scale(new_data)

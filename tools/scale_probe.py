@@ -26,13 +26,13 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from storm_data_etl_spark.session import get_spark, release_pinned
+from bench import measure
+from storm_data_etl_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
 DEFAULT_QUERIES = [
@@ -117,17 +117,11 @@ def main() -> int:
     for name in names:
         times = {}
         for label, d in (("sf0.1", SRC), (f"{n}x", dest)):
-            df = qs[name](spark, d)
-            best = float("inf")
-            for _ in range(2):
-                start = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - start)
-                # release BETWEEN reps too: pinned intermediates (LSH
-                # signatures) would otherwise make rep 2 measure only the
-                # post-cache tail and understate the true exponent.
-                release_pinned()
-            times[label] = round(best, 3)
+            # min of two 1-rep measurements: measure() releases pins after
+            # each, so pinned intermediates (LSH signatures) cannot make
+            # rep 2 measure only the post-cache tail and understate the
+            # true exponent.
+            times[label] = round(min(measure(spark, qs[name], d, 1)[1] for _ in range(2)), 3)
         exp = (
             math.log(times[f"{n}x"] / times["sf0.1"]) / math.log(n)
             if times["sf0.1"] > 0

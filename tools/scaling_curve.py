@@ -17,13 +17,13 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
 
-from storm_data_etl_spark.session import get_spark, release_pinned  # noqa: E402
+from bench import HEADLINE, ONLY, REGISTRY, measure, warm_up  # noqa: E402
+from storm_data_etl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -32,39 +32,17 @@ def main() -> int:
         "/root/testdata/sf0.01",
         "/root/testdata/sf0.1",
     ]
-    import bench
-
     spark = get_spark("scaling-curve", master="local[32]")
-    from storm_data_etl_spark.plans import queries as _q
-    from storm_data_etl_spark.plans.tables import t
-
-    runners = {
-        name: _q.REGISTRY[name].runner
-        for name in bench.HEADLINE
-        if name in _q.REGISTRY
-    }
-    # Same dev-loop subset filter as bench.py.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    only_set = {s.strip() for s in only.split(",") if s.strip()}
-    if only_set:
-        runners = {n: f for n, f in runners.items() if n in only_set}
+    # bench.py's headline set, narrowed by the same dev-loop subset filter.
+    runners = {n: REGISTRY[n].runner for n in HEADLINE if not ONLY or n in ONLY}
 
     results: dict[str, dict[str, float]] = {}
     sfs: list[float] = []
     for sf_dir in sf_dirs:
         sf = float(sf_dir.rstrip("/").split("sf")[-1])
         sfs.append(sf)
-        t(spark, sf_dir, "lineitem").count()  # warmup: JVM + cache fill
-        times: dict[str, float] = {}
-        for name, fn in runners.items():
-            df = fn(spark, sf_dir)
-            best = float("inf")
-            for _ in range(2):
-                start = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - start)
-            times[name] = round(best, 3)
-            release_pinned()
+        warm_up(spark, sf_dir)
+        times = {name: round(measure(spark, fn, sf_dir, 2)[2], 3) for name, fn in runners.items()}
         results[str(sf)] = times
         print(json.dumps({"sf": sf, "queries": times}))
 
