@@ -22,6 +22,15 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #: session creation, so set it before the first get_spark() of a process.
 DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
+#: Streaming checkpoint manager (offset, commit and file-source logs):
+#: check-then-rename writes like the default FileContext manager, which on a
+#: local FS without the native Hadoop library forks a `readlink` per path
+#: resolution, ~24 OS processes per micro-batch (docs/LIMITS.md).
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 #: DataFrames pinned by operators whose correctness depends on a single
 #: materialization (global_rank, curation_funnel). The pin must outlive the
 #: caller's terminal action, so operators cannot unpersist internally —
@@ -56,7 +65,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession configured for this engine.
 
-    UTC session timezone, AQE enabled, Arrow enabled for the few Pandas-UDF
+    UTC session timezone, FileSystem-based streaming checkpoint manager,
+    AQE enabled, Arrow enabled for the few Pandas-UDF
     paths, shuffle parallelism sized to cores (not the 200 default, which
     over-parallelizes local runs and under-parallelizes 100 TB ones — on a
     real cluster set SPARK_GRAFT_SHUFFLE_PARTITIONS ≈ 2-3× total cores).
@@ -70,6 +80,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

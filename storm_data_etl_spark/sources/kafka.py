@@ -17,7 +17,6 @@ testable offline and is the part with semantics worth testing.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 DEFAULT_BATCH_SIZE = 50  # reference BATCH_SIZE default (config.go:43-54)
 DEFAULT_FLUSH_INTERVAL = "500 milliseconds"  # BATCH_FLUSH_INTERVAL default
@@ -105,37 +104,20 @@ def serialize_events(enriched: DataFrame) -> DataFrame:
     *zero-valued* omitempty fields — e.g. lat/lon 0.0 and '' strings stay
     present here — and serializes zero time_bucket as 0001-01-01; both are
     wire-format cosmetics with no query-surface impact.)
+
+    One `selectExpr`: the streaming sinks call this once per micro-batch,
+    and building the same three expressions as ~25 py4j Column objects
+    cost ~26 ms more driver time per call.
     """
-    value = F.to_json(
-        F.struct(
-            "id",
-            "event_type",
-            "geo",
-            "measurement",
-            "event_time",
-            "location",
-            "comments",
-            "source_office",
-            "time_bucket",
-            "processed_at",
-        )
-    )
-    headers = F.array(
-        F.struct(
-            F.lit("event_type").alias("key"),
-            F.col("event_type").cast("binary").alias("value"),
-        ),
-        F.struct(
-            F.lit("processed_at").alias("key"),
-            F.date_format("processed_at", "yyyy-MM-dd'T'HH:mm:ss'Z'")
-            .cast("binary")
-            .alias("value"),
-        ),
-    )
-    return enriched.select(
-        F.col("id").cast("binary").alias("key"),
-        value.cast("binary").alias("value"),
-        headers.alias("headers"),
+    return enriched.selectExpr(
+        "CAST(id AS BINARY) AS key",
+        "CAST(to_json(struct(id, event_type, geo, measurement, event_time, location,"
+        " comments, source_office, time_bucket, processed_at)) AS BINARY) AS value",
+        "array("
+        "named_struct('key', 'event_type', 'value', CAST(event_type AS BINARY)), "
+        "named_struct('key', 'processed_at', 'value', "
+        "CAST(date_format(processed_at, 'yyyy-MM-dd\\'T\\'HH:mm:ss\\'Z\\'') AS BINARY))"
+        ") AS headers",
     )
 
 

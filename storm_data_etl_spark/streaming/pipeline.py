@@ -71,7 +71,7 @@ def _tag_envelope(envelope: DataFrame) -> DataFrame:
 def _dead_letters(tagged: DataFrame) -> DataFrame:
     """The invalid rows of a tagged DataFrame as the original envelope rows
     (every column and type, value bytes and offsets intact)."""
-    return tagged.filter(~F.col("_valid")).select("_envelope.*")
+    return tagged.filter("NOT _valid").select("_envelope.*")
 
 
 def split_poison(envelope: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -83,7 +83,7 @@ def split_poison(envelope: DataFrame) -> tuple[DataFrame, DataFrame]:
     (pipeline.go:127-139).
     """
     tagged = _tag_envelope(envelope)
-    return tagged.filter(F.col("_valid")).drop("_envelope"), _dead_letters(tagged)
+    return tagged.filter("_valid").drop("_envelope"), _dead_letters(tagged)
 
 
 def enrich_stream(
@@ -127,13 +127,24 @@ def run_pipeline(
     micro-batch timestamp (stable across the batch's actions and retries).
 
     ``metrics`` (a PipelineMetricsListener) mirrors the reference's in-loop
-    counter increments (pipeline.go's MessagesProduced / TransformErrors).
+    counter increments (pipeline.go's MessagesProduced / TransformErrors),
+    both taken from one aggregate after every write has succeeded.
     Each micro-batch is persisted for its several actions (sinks and
     counts), bounded by the micro-batch size — the standard multi-action
     foreachBatch pattern.
+
+    Per-batch fixed cost (docs/LIMITS.md): the sink actions run with AQE
+    off on the stream's own cloned session (``batch_df.sparkSession``) —
+    the batches are small and bounded, and the caller's session keeps
+    AQE — and the checkpoint logs are written through the FileSystem-based
+    checkpoint manager that `session.get_spark` pins.
     """
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        # The batch's session is the stream's own clone, not the caller's:
+        # with AQE on it, each small bounded sink action split into extra
+        # jobs and stages (docs/LIMITS.md). The caller's session keeps AQE.
+        batch_df.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
         # The batch is a scan of the query plan's computed rows, so every
         # action on it would re-run the enrichment: persist it once for the
         # sink, dead-letter and counter actions. Persist in try/finally: a
@@ -141,7 +152,7 @@ def run_pipeline(
         # (Spark re-runs the epoch). Counter increments are deferred to
         # after ALL sink writes (see below).
         batch_df = batch_df.persist()
-        good = batch_df.filter(F.col("_valid")).drop(*SPLIT_COLS)
+        good = batch_df.filter("_valid").drop(*SPLIT_COLS)
         dead = _dead_letters(batch_df)
         try:
             if sink is not None:
@@ -172,10 +183,14 @@ def run_pipeline(
             # main write — would double-count on a dead-letter failure.
             # Mirrors the reference's count-after-produce loop
             # (pipeline.go increments MessagesProduced only once the Kafka
-            # produce returns).
+            # produce returns). One global aggregate gives both counts in
+            # one action, 0 for a side with no rows.
             if metrics is not None:
-                metrics.record_produced(good.count())
-                metrics.record_transform_errors(dead.count())
+                produced, errors = batch_df.selectExpr(
+                    "count_if(_valid)", "count_if(NOT _valid)"
+                ).first()
+                metrics.record_produced(produced)
+                metrics.record_transform_errors(errors)
         finally:
             batch_df.unpersist()
 

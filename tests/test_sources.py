@@ -99,6 +99,24 @@ def test_serialize_events_wire_format(spark):
     enriched = enrich_raw(raw, processed_at="2024-04-27 06:00:00")
     msg = serialize_events(enriched).collect()[0]
 
+    # the exact wire bytes: field order and formatting are the contract
+    assert bytes(msg.key) == b"hail-5d91dda0f56ba124"
+    assert bytes(msg.value) == (
+        b'{"id":"hail-5d91dda0f56ba124","event_type":"hail",'
+        b'"geo":{"lat":31.02,"lon":-98.44},'
+        b'"measurement":{"magnitude":1.25,"unit":"in","severity":"moderate"},'
+        b'"event_time":"2024-04-26T15:10:00.000Z",'
+        b'"location":{"raw":"8 ESE Chappel","name":"Chappel","distance":8.0,'
+        b'"direction":"ESE","state":"TX","county":"San Saba"},'
+        b'"comments":"Hail. (SJT)","source_office":"SJT",'
+        b'"time_bucket":"2024-04-26T15:00:00.000Z",'
+        b'"processed_at":"2024-04-27T06:00:00.000Z"}'
+    )
+    assert [(h.key, bytes(h.value)) for h in msg.headers] == [
+        ("event_type", b"hail"),
+        ("processed_at", b"2024-04-27T06:00:00Z"),
+    ]
+
     key = bytes(msg.key).decode()
     assert key.startswith("hail-") and len(key) == 5 + 16
 

@@ -5,8 +5,10 @@ micro-batch into good events and dead letters. These tests drain small
 file-source backlogs (one file per micro-batch) through it and check every
 epoch against `enrich_envelope` over the same lines, for both envelope forms
 the pipeline is fed: the text source adapted by `text_stream_to_envelope`
-and a JSON-schema envelope. They also pin that the plan is built once and
-that `processed_at=None` is one clock value per micro-batch.
+and a JSON-schema envelope. They also pin that the plan is built once, that
+`processed_at=None` is one clock value per micro-batch, and the per-batch
+cost settings: sink actions run without AQE on the stream's own session
+(the caller's keeps it) and checkpoints use the FileSystem-based manager.
 """
 
 from __future__ import annotations
@@ -14,9 +16,11 @@ from __future__ import annotations
 import json
 import os
 
+from storm_data_etl_spark import session
 from storm_data_etl_spark.functions.enrich import enrich_envelope, json_valid
 from storm_data_etl_spark.sources.kafka import serialize_events
 from storm_data_etl_spark.streaming import pipeline
+from storm_data_etl_spark.streaming.metrics import PipelineMetricsListener
 from storm_data_etl_spark.streaming.pipeline import run_pipeline, text_stream_to_envelope
 
 PROCESSED_AT = "2024-04-27 06:00:00"
@@ -175,3 +179,47 @@ def test_processed_at_is_one_value_per_batch(spark, tmp_path):
     for epoch, (first, second) in seen.items():
         assert len(first) == 1 and None not in first, f"epoch {epoch}: {first}"
         assert first == second, f"epoch {epoch}: {first} then {second}"
+
+
+def test_get_spark_pins_filesystem_checkpoint_manager(spark):
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == session.CHECKPOINT_FILE_MANAGER
+    assert session.CHECKPOINT_FILE_MANAGER.endswith(".FileSystemBasedCheckpointFileManager")
+
+
+def test_sink_actions_run_without_aqe_caller_keeps_it(spark, tmp_path):
+    """AQE is switched off on the stream's cloned session only: the batch
+    DataFrames the sinks see carry it off, the caller's session keeps it."""
+    _write_files(str(tmp_path / "src"), TEXT_BATCHES[:1])
+    stream = _text_stream(spark, str(tmp_path / "src"))
+    seen = {}
+
+    def sink(df, epoch):
+        seen[epoch] = df.sparkSession.conf.get("spark.sql.adaptive.enabled")
+
+    q = run_pipeline(spark, stream, str(tmp_path / "ckpt"), sink=sink, trigger_interval="0 seconds")
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert seen == {0: "false"}
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_metrics_count_a_batch_without_poison(spark, tmp_path):
+    """The one counter aggregate records 0 errors when a batch has no
+    poison pill, and every row of a clean batch as produced."""
+    clean = [[json.dumps(HAIL), json.dumps(WIND)], [json.dumps(TORNADO)]]
+    _write_files(str(tmp_path / "src"), clean)
+    stream = _text_stream(spark, str(tmp_path / "src"))
+    metrics = PipelineMetricsListener()
+    q = run_pipeline(
+        spark, stream, str(tmp_path / "ckpt"), sink=lambda df, epoch: None,
+        trigger_interval="0 seconds", processed_at=PROCESSED_AT, metrics=metrics,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    snap = metrics.snapshot()
+    assert (snap.produced_total, snap.transform_errors_total) == (3, 0)

@@ -102,7 +102,8 @@ def main() -> int:
         return 2
     only = sys.argv[2:]
     dest = f"/tmp/spark-graft-sf{n}x"
-    spark = get_spark("scale-probe", master="local[32]")
+    # master=None: local[SPARK_GRAFT_CPUS], the cpus bench_delta compares
+    spark = get_spark("scale-probe", master=None)
 
     if not os.path.exists(f"{dest}/region.parquet"):
         print(f"building {n}x replica at {dest} ...", file=sys.stderr)

@@ -20,8 +20,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-
 from bench import HEADLINE, ONLY, REGISTRY, measure, warm_up  # noqa: E402
 from storm_data_etl_spark.session import get_spark  # noqa: E402
 
@@ -32,7 +30,11 @@ def main() -> int:
         "/root/testdata/sf0.01",
         "/root/testdata/sf0.1",
     ]
-    spark = get_spark("scaling-curve", master="local[32]")
+    # Cluster-resident tables, as bench.py times them; set here, not at
+    # import, so importing this module changes no caching.
+    os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
+    # master=None: local[SPARK_GRAFT_CPUS], the cpus bench_delta compares
+    spark = get_spark("scaling-curve", master=None)
     # bench.py's headline set, narrowed by the same dev-loop subset filter.
     runners = {n: REGISTRY[n].runner for n in HEADLINE if not ONLY or n in ONLY}
 
